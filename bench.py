@@ -221,7 +221,6 @@ def main() -> None:
         "q_flagship_features",  # superseded by the timed flagship above
         "q_equalized_edges",    # synth-table demo
         "q_checkpoint_ledger",  # contract demo (tempdir write/resume)
-        "q_flagship_parity",    # contract demo (runs the flagship twice)
     }
     # Steady state per query: one UNTIMED warm-up execution (plan +
     # codegen compile + python-worker setup), then timed reps that

@@ -9,7 +9,7 @@ Zero temporal leakage: a matched right timestamp NEVER exceeds the left
 timestamp in backward mode.
 
 Physical strategies (``asof_join_auto`` picks between the first two by a
-bounded right-side row-count probe; the rest are opt-in):
+bounded right-side row-count probe; cogroup is opt-in):
 
 1. ``asof_join`` — salted/range-bucketed union-window merge (the 100 TB
    path), 100% JVM-side / whole-stage codegen. Both sides are bucketed on
@@ -35,13 +35,14 @@ bounded right-side row-count probe; the rest are opt-in):
    on entity, per-entity searchsorted merge; each task holds only its
    entities' slice of the index (never the whole 3 GB stats table).
 
-4. ``asof_join_window`` — union + last(ignorenulls) window partitioned by
-   entity alone. One shuffle, minimal plan — optimal when no entity's
-   history overwhelms one task. Used as a cross-check in tests.
+Broadcast and cogroup are the two index strategies: both build the same
+per-entity sorted index (``_right_index``) and run every match through
+``_np_asof_match`` plus one gather (``_asof_gather``); they differ only in
+where the index lives.
 
 Directions: backward / forward / nearest, plus "interpolate" (linear
-interpolation between the bracketing samples, reference N8) on the
-bucketed, broadcast, and cogroup strategies.
+interpolation between the bracketing samples, reference N8) on all three
+strategies and "cubic" on the two index strategies.
 
 DuckDB's native ASOF JOIN is the correctness oracle for all of them.
 """
@@ -152,8 +153,8 @@ def _np_asof_match(rts, t, direction: str, tolerance):
     Returns (ok_mask, sel) for backward/forward/nearest — sel[i] indexes rts
     where ok — or (ok_mask, (bi, fi, frac)) for interpolate, where the
     output value is vb + (vf - vb) * frac (exact hits give frac == 0).
-    Shared by the broadcast and cogroup physical strategies so their
-    semantics cannot drift.
+    Called only from _asof_gather, which both index strategies share, so
+    their semantics cannot drift.
 
     A NaN left timestamp never matches (searchsorted would otherwise
     place NaN after every right row — a spurious backward match against
@@ -256,7 +257,7 @@ def _resolve_output_cols(
 ):
     """Shared strategy prologue: defaulted right columns, output renames,
     and the argument validations every strategy needs (kept in ONE place
-    so the four physical strategies cannot drift):
+    so the three physical strategies cannot drift):
 
     - right_cols must not contain `on` or a `by` key (a duplicate alias is
       an ambiguous-attribute error three plans later; include_right_on is
@@ -553,90 +554,135 @@ def asof_join(
     return filled.select(*sel)
 
 
-def asof_join_window(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "ts",
-    by="entity_id",
-    right_cols=None,
-    tolerance: float | None = None,
-    suffix: str = "_right",
-    include_right_on: bool = False,
-) -> DataFrame:
-    """Backward as-of join via union + last(ignorenulls) window — one
-    shuffle, no Python. At equal timestamps the right row sorts first, so
-    matches are inclusive (right.ts <= left.ts), identical to DuckDB
-    ASOF JOIN semantics.
+def _key_tuple(key):
+    return key if isinstance(key, tuple) else (key,)
 
-    The right payload travels as ONE struct, so all fill columns come
-    from the same winning row even when that row has null fields (per-
-    column fills could mix rows); duplicate (entity, ts) right rows
-    tie-break to the greatest payload struct (struct comparison, null
-    fields smallest) — the same contract as the other strategies. Right
-    rows with a null timestamp are unmatchable and dropped."""
-    by_l = _as_list(by)
-    rcols, out_rnames, right_on_out = _resolve_output_cols(
-        left, right, on, by_l, right_cols, suffix, include_right_on, "backward"
-    )
 
-    lkeep = [c for c in left.columns if c not in set(by_l) | {on}]
-    pay = F.struct(
-        F.col(on).alias("_p_on"), *[F.col(c).alias(c) for c in rcols]
-    )
-    l2 = left.select(
-        *by_l,
-        F.col(on),
-        F.lit(1).alias("_tag"),
-        *[F.col(c) for c in lkeep],
-        F.lit(None)
-        .cast(
-            right.select(pay.alias("_p")).schema["_p"].dataType
-        )
-        .alias("_p"),
-    )
-    r_nonnull = F.col(on).isNotNull()
-    for c in by_l:
-        r_nonnull = r_nonnull & F.col(c).isNotNull()
-    r2 = right.where(r_nonnull).select(
-        *by_l,
-        F.col(on),
-        F.lit(0).alias("_tag"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lkeep],
-        pay.alias("_p"),
-    )
-    u = l2.unionByName(r2)
-    w = (
-        Window.partitionBy(*by_l)
-        .orderBy(on, "_tag", "_p")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = u.select(
-        *by_l,
-        F.col(on),
-        "_tag",
-        *lkeep,
-        F.last("_p", ignorenulls=True).over(w).alias("_f"),
-    ).where(F.col("_tag") == 1)
+def _index_output(left: DataFrame, right: DataFrame, on: str, rcols, out_rnames,
+                  right_on_out, blend: bool):
+    """Output schema and gather targets shared by the index strategies:
+    the left columns, then one column per right payload column (double
+    for multi-row blends), then the matched right timestamp if asked.
 
-    match = F.col("_f")
-    if tolerance is not None:
-        from pyspark.sql.types import TimestampNTZType
+    Returns (rschema, gather_cols, out_schema); gather_cols pairs each
+    right source column with its output name."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
 
-        lc, rc = F.col(on), F.col("_f._p_on")
-        if isinstance(left.schema[on].dataType, TimestampNTZType):
-            lc = lc.cast("timestamp")
-        if isinstance(right.schema[on].dataType, TimestampNTZType):
-            rc = rc.cast("timestamp")
-        within = (lc.cast("double") - rc.cast("double")) <= F.lit(float(tolerance))
-        match = F.when(within, F.col("_f"))
-
-    filled = filled.withColumn("_m", match)
-    sel = [F.col(c) for c in left.columns] + [
-        F.col(f"_m.{c}").alias(oc) for c, oc in zip(rcols, out_rnames)
-    ]
+    rschema = {f.name: f for f in right.schema.fields}
+    gather_cols = list(zip(rcols, out_rnames))
     if right_on_out:
-        sel.append(F.col("_m._p_on").alias(right_on_out))
-    return filled.select(*sel)
+        gather_cols.append((on, right_on_out))
+    out_schema = StructType(
+        list(left.schema.fields)
+        + [
+            StructField(oc, DoubleType() if blend else rschema[c].dataType, True)
+            for c, oc in gather_cols
+        ]
+    )
+    return rschema, gather_cols, out_schema
+
+
+def _right_index(rp, by_l: list, on: str, rcols, rschema, prefix: str = ""):
+    """Collected right side -> {entity key tuple: (sorted ts, payload)}.
+
+    Right rows with a null timestamp are unmatchable and dropped (NaN in
+    a sorted array corrupts searchsorted). The rest are sorted by
+    (keys, ts, payload...) (see _dup_ts_sort), so each entity's rows form
+    one contiguous run and its ts array and payload arrays are plain
+    slices (views) of whole-frame arrays. Datetime payloads become naive
+    UTC datetime64[us].
+
+    Also returns the right columns' pandas dtypes (keyed by source column,
+    {} when no right row survives), which type the output targets; dtype
+    templates only, so task closures never capture the right side."""
+    import pandas as pd
+
+    if len(rp):
+        rp = rp[rp[prefix + on].notna()]
+    if len(rp) == 0:
+        return {}, {}
+    rp = _dup_ts_sort(rp, [*by_l, on], rcols, rschema, prefix=prefix)
+    cols = (on, *rcols)
+    payload = {}
+    for c in cols:
+        s = rp[prefix + c]
+        payload[c] = (
+            _dt_naive(s).to_numpy().astype("datetime64[us]")
+            if pd.api.types.is_datetime64_any_dtype(s.dtype)
+            else s.to_numpy()
+        )
+    rts = _ts_np_series(rp[prefix + on])
+    index = {}
+    groups = rp.groupby([prefix + c for c in by_l], sort=False).indices
+    for key, rows in groups.items():
+        run = slice(rows[0], rows[-1] + 1)
+        index[_key_tuple(key)] = (rts[run], {c: a[run] for c, a in payload.items()})
+    return index, {c: rp[prefix + c].dtype for c in cols}
+
+
+def _alloc(n: int, dtype, blend: bool):
+    """One typed output target: float/datetime columns get native arrays
+    (NaN/NaT missing), everything else object (None missing)."""
+    import numpy as np
+    import pandas as pd
+
+    if blend or (dtype is not None and dtype.kind == "f"):
+        return np.full(n, np.nan, dtype=np.float64)
+    if dtype is not None and pd.api.types.is_datetime64_any_dtype(dtype):
+        return np.full(n, np.datetime64("NaT"), dtype="datetime64[us]")
+    return np.full(n, None, dtype=object)
+
+
+def _asof_gather(lkeys, by_l: list, on: str, index: dict, dtypes: dict,
+                 gather_cols, direction: str, tolerance):
+    """The one gather of both index strategies: match every left row of
+    `lkeys` (a pandas frame holding at least the by and on columns)
+    against its entity's run in `index` (from _right_index) with
+    _np_asof_match, and scatter the matched (backward / forward /
+    nearest) or blended (interpolate / cubic) right values into typed
+    output arrays. Returns {output name: array of len(lkeys)}; unmatched
+    rows stay missing."""
+    import numpy as np
+
+    n = len(lkeys)
+    blend = direction in ("interpolate", "cubic")
+    targets = {oc: _alloc(n, dtypes.get(c), blend) for c, oc in gather_cols}
+    if not index:
+        return targets
+    lts = _ts_np_series(lkeys[on])
+    for key, rows in lkeys.groupby(by_l, sort=False).indices.items():
+        ent = index.get(_key_tuple(key))
+        if ent is None:
+            continue
+        rts, payload = ent
+        t = lts[rows]
+        ok, m = _np_asof_match(rts, t, direction, tolerance)
+        if not ok.any():
+            continue
+        hit_rows = rows[ok]
+        if direction == "interpolate":
+            bi, fi, frac = m
+            for c, oc in gather_cols:
+                vb = payload[c][bi].astype(np.float64)
+                vf = payload[c][fi].astype(np.float64)
+                targets[oc][hit_rows] = (vb + (vf - vb) * frac)[ok]
+        elif direction == "cubic":
+            i0, i1, i2, i3 = m
+            for c, oc in gather_cols:
+                pv = payload[c]
+                vals = _cubic_eval(
+                    t, rts[i0], rts[i1], rts[i2], rts[i3],
+                    pv[i0].astype(np.float64),
+                    pv[i1].astype(np.float64),
+                    pv[i2].astype(np.float64),
+                    pv[i3].astype(np.float64),
+                )
+                targets[oc][hit_rows] = vals[ok]
+        else:
+            hit_sel = m[ok]
+            for c, oc in gather_cols:
+                targets[oc][hit_rows] = payload[c][hit_sel]
+    return targets
 
 
 def asof_join_broadcast(
@@ -663,26 +709,16 @@ def asof_join_broadcast(
     Mirrors the reference's grid-alignment resample where the TARGET grid is
     dense and the SOURCE samples are sparse (tools/Resample.cxx:83-99).
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    from pyspark.sql.pandas.types import to_arrow_type
 
     by_l = _as_list(by)
     rcols, out_rnames, right_on_out = _resolve_output_cols(
         left, right, on, by_l, right_cols, suffix, include_right_on, direction
     )
-    interp = direction == "interpolate"
-    cubic = direction == "cubic"
-    blend = interp or cubic  # multi-row blends emit double columns
-
-    rschema = {f.name: f for f in right.schema.fields}
-    out_fields = list(left.schema.fields) + [
-        StructField(oc, DoubleType() if blend else rschema[c].dataType, True)
-        for c, oc in zip(rcols, out_rnames)
-    ]
-    if right_on_out:
-        out_fields.append(StructField(right_on_out, rschema[on].dataType, True))
-    out_schema = StructType(out_fields)
+    rschema, gather_cols, out_schema = _index_output(
+        left, right, on, rcols, out_rnames, right_on_out,
+        direction in ("interpolate", "cubic"),
+    )
 
     # Collect + index the right side on the driver (counted, bounded).
     # Known pandas round-trip limitation (also applies to cogroup): a
@@ -696,125 +732,31 @@ def asof_join_broadcast(
             "use asof_join (bucketed) or asof_join_cogroup instead "
             "(asof_join_auto picks automatically)"
         )
-
-    index: dict = {}
-    # right rows with a null timestamp are unmatchable — drop them before
-    # the index build (NaN in a sorted array corrupts searchsorted)
-    rp = rp[rp[on].notna()]
-    if len(rp):
-        # secondary sort on the payload columns (see _dup_ts_sort): among
-        # duplicate right timestamps, backward deterministically matches
-        # the greatest payload and forward the least — same contract as
-        # the bucketed strategy's struct-max/min
-        rp = _dup_ts_sort(rp, [*by_l, on], rcols, rschema)
-        for key, grp in rp.groupby(by_l, sort=False):
-            k = key if isinstance(key, tuple) else (key,)
-            payload = {
-                c: (
-                    _dt_naive(grp[c]).to_numpy().astype("datetime64[us]")
-                    if pd.api.types.is_datetime64_any_dtype(grp[c].dtype)
-                    else grp[c].to_numpy()
-                )
-                for c in (on, *rcols)
-            }
-            index[k] = (_ts_np_series(grp[on]), payload)
-    sc = left.sparkSession.sparkContext
-    b_index = sc.broadcast(index)
-    lcols = [f.name for f in left.schema.fields]
-    # dtype templates only — capturing `rp` itself would cloudpickle the
-    # whole collected right side into every task closure, duplicating the
-    # broadcast at up to max_right_rows scale
-
-    # Output gather targets, typed: float/datetime columns get native
-    # arrays (NaN/NaT missing); everything else object (None missing).
-    gather_cols = list(zip(rcols, out_rnames))
-    if right_on_out:
-        gather_cols.append((on, right_on_out))
-
-    def _alloc(n: int, src: pd.Series):
-        if blend:
-            return np.full(n, np.nan, dtype=np.float64)
-        if pd.api.types.is_datetime64_any_dtype(src.dtype):
-            return np.full(n, np.datetime64("NaT"), dtype="datetime64[us]")
-        if np.issubdtype(src.dtype, np.floating):
-            return np.full(n, np.nan, dtype=np.float64)
-        return np.full(n, None, dtype=object)
-
-    templates = (
-        {oc: rp[c].iloc[:0] for c, oc in gather_cols} if len(rp) else None
-    )
+    index, dtypes = _right_index(rp, by_l, on, rcols, rschema)
+    b_index = left.sparkSession.sparkContext.broadcast(index)
+    lcols = left.columns
+    out_names = [f.name for f in out_schema.fields]
+    out_pa_types = [to_arrow_type(f.dataType) for f in out_schema.fields[len(lcols):]]
 
     # Arrow-native stage: heavy payload columns (token arrays) pass through
     # untouched as Arrow buffers; only the key/time columns are converted.
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    out_pa_types = {
-        oc: to_arrow_type(DoubleType() if blend else rschema[c].dataType)
-        for c, oc in gather_cols
-    }
-
     def fn(batches):
         import pyarrow as pa
 
         idx = b_index.value
         for rb in batches:
-            n = len(rb)
             keydf = pa.table(
                 [rb.column(lcols.index(c)) for c in [*by_l, on]],
                 names=[*by_l, on],
             ).to_pandas()
-            lts = _ts_np_series(keydf[on])
-            grp_of = keydf.groupby(by_l, sort=False).indices
-            targets = (
-                {oc: _alloc(n, templates[oc]) for _c, oc in gather_cols}
-                if templates is not None
-                else {}
+            targets = _asof_gather(
+                keydf, by_l, on, idx, dtypes, gather_cols, direction, tolerance
             )
-            for key, rows in grp_of.items():
-                k = key if isinstance(key, tuple) else (key,)
-                ent = idx.get(k)
-                if ent is None:
-                    continue
-                rts, payload = ent
-                t = lts[rows]
-                ok, m = _np_asof_match(rts, t, direction, tolerance)
-                if not ok.any():
-                    continue
-                hit_rows = rows[ok]
-                if interp:
-                    bi, fi, frac = m
-                    for c, oc in gather_cols:
-                        vb = payload[c][bi].astype(np.float64)
-                        vf = payload[c][fi].astype(np.float64)
-                        targets[oc][hit_rows] = (vb + (vf - vb) * frac)[ok]
-                elif cubic:
-                    i0, i1, i2, i3 = m
-                    for c, oc in gather_cols:
-                        vals = _cubic_eval(
-                            t, rts[i0], rts[i1], rts[i2], rts[i3],
-                            payload[c][i0].astype(np.float64),
-                            payload[c][i1].astype(np.float64),
-                            payload[c][i2].astype(np.float64),
-                            payload[c][i3].astype(np.float64),
-                        )
-                        targets[oc][hit_rows] = vals[ok]
-                else:
-                    hit_sel = m[ok]
-                    for c, oc in gather_cols:
-                        targets[oc][hit_rows] = payload[c][hit_sel]
-            new_cols = []
-            for _c, oc in gather_cols:
-                t = targets.get(oc)
-                if t is None:
-                    new_cols.append(pa.nulls(n, out_pa_types[oc]))
-                else:
-                    new_cols.append(
-                        pa.array(t, type=out_pa_types[oc], from_pandas=True)
-                    )
-            yield pa.record_batch(
-                list(rb.columns) + new_cols,
-                names=lcols + [oc for _c, oc in gather_cols],
-            )
+            new_cols = [
+                pa.array(targets[oc], type=pt, from_pandas=True)
+                for (_c, oc), pt in zip(gather_cols, out_pa_types)
+            ]
+            yield pa.record_batch(list(rb.columns) + new_cols, names=out_names)
 
     return left.mapInArrow(fn, out_schema)
 
@@ -841,120 +783,42 @@ def asof_join_cogroup(
     table, SCALE.md) never concentrates on the driver or in every
     executor — and the Python call count is num_buckets, not #entities
     (per-entity cogroups were measured ~10x slower from per-group
-    applyInPandas overhead alone). Matching semantics are shared with
-    asof_join_broadcast via _np_asof_match, including the duplicate-
-    timestamp contract (backward = greatest payload, forward = least)
-    and direction="interpolate".
+    applyInPandas overhead alone). Index build and gather are shared with
+    asof_join_broadcast (_right_index, _asof_gather), including the
+    duplicate-timestamp contract (backward = greatest payload, forward =
+    least) and the interpolate / cubic blends.
 
     Skew note: a single entity's whole left+right history lands in one
     bucket, so this is the mid-tier for many-entity, non-pathological
     distributions; a hot-entity workload should use asof_join (bucketed),
     which additionally splits entities across time buckets.
     """
-    import numpy as np
     import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
     by_l = _as_list(by)
     rcols, out_rnames, right_on_out = _resolve_output_cols(
         left, right, on, by_l, right_cols, suffix, include_right_on, direction
     )
-    interp = direction == "interpolate"
-    cubic = direction == "cubic"
-    blend = interp or cubic  # multi-row blends emit double columns
-
-    rschema = {f.name: f for f in right.schema.fields}
-    out_fields = list(left.schema.fields) + [
-        StructField(oc, DoubleType() if blend else rschema[c].dataType, True)
-        for c, oc in zip(rcols, out_rnames)
-    ]
-    if right_on_out:
-        out_fields.append(StructField(right_on_out, rschema[on].dataType, True))
-    out_schema = StructType(out_fields)
-    out_names = [f.name for f in out_fields]
-    gather_cols = list(zip(rcols, out_rnames))
-    if right_on_out:
-        gather_cols.append((on, right_on_out))
+    rschema, gather_cols, out_schema = _index_output(
+        left, right, on, rcols, out_rnames, right_on_out,
+        direction in ("interpolate", "cubic"),
+    )
+    out_names = [f.name for f in out_schema.fields]
 
     # Rename the right side up front: cogroup's Arrow transfer silently
     # drops right-side columns whose names collide with left-side non-key
     # columns (observed on the shared `on` column under self-lineage).
     RP = "_r_"
 
-    def _alloc(n: int, src):
-        if blend:
-            return np.full(n, np.nan, dtype=np.float64)
-        if src is not None and pd.api.types.is_datetime64_any_dtype(src.dtype):
-            return np.full(n, np.datetime64("NaT"), dtype="datetime64[us]")
-        if src is not None and src.dtype.kind == "f":
-            return np.full(n, np.nan, dtype=np.float64)
-        return np.full(n, None, dtype=object)
-
     def merge(lp: pd.DataFrame, rp: pd.DataFrame) -> pd.DataFrame:
-        n = len(lp)
-        if n == 0:
+        if len(lp) == 0:
             return pd.DataFrame(columns=out_names)
+        index, dtypes = _right_index(rp, by_l, on, rcols, rschema, prefix=RP)
+        targets = _asof_gather(
+            lp, by_l, on, index, dtypes, gather_cols, direction, tolerance
+        )
         out = lp.drop(columns=["_g"])
-        if len(rp) == 0:
-            for c, oc in gather_cols:
-                out[oc] = _alloc(n, None)
-            return out[out_names]
-        # same duplicate-ts contract as the broadcast index build (null ts
-        # rows unmatchable; null payload = smallest tuple, like struct-max)
-        rp = rp[rp[RP + on].notna()]
-        if len(rp) == 0:
-            for c, oc in gather_cols:
-                out[oc] = _alloc(n, None)
-            return out[out_names]
-        rp = _dup_ts_sort(rp, [*by_l, on], rcols, rschema, prefix=RP)
-        payload = {
-            c: (
-                _dt_naive(rp[RP + c]).to_numpy().astype("datetime64[us]")
-                if pd.api.types.is_datetime64_any_dtype(rp[RP + c].dtype)
-                else rp[RP + c].to_numpy()
-            )
-            for c in (on, *rcols)
-        }
-        rts_all = _ts_np_series(rp[RP + on])
-        r_groups = rp.groupby([RP + c for c in by_l], sort=False).indices
-        lts = _ts_np_series(lp[on])
-        l_groups = lp.groupby(by_l, sort=False).indices
-        targets = {oc: _alloc(n, rp[RP + c]) for c, oc in gather_cols}
-        for key, rows in l_groups.items():
-            rrows = r_groups.get(key)
-            if rrows is None:
-                continue
-            # rp is entity-sorted, so an entity's rows are one contiguous,
-            # ts-sorted slice
-            rts = rts_all[rrows]
-            ok, m = _np_asof_match(rts, lts[rows], direction, tolerance)
-            if not ok.any():
-                continue
-            hit_rows = rows[ok]
-            if interp:
-                bi, fi, frac = m
-                for c, oc in gather_cols:
-                    vb = payload[c][rrows][bi].astype(np.float64)
-                    vf = payload[c][rrows][fi].astype(np.float64)
-                    targets[oc][hit_rows] = (vb + (vf - vb) * frac)[ok]
-            elif cubic:
-                i0, i1, i2, i3 = m
-                t = lts[rows]
-                for c, oc in gather_cols:
-                    pv = payload[c][rrows]
-                    vals = _cubic_eval(
-                        t, rts[i0], rts[i1], rts[i2], rts[i3],
-                        pv[i0].astype(np.float64),
-                        pv[i1].astype(np.float64),
-                        pv[i2].astype(np.float64),
-                        pv[i3].astype(np.float64),
-                    )
-                    targets[oc][hit_rows] = vals[ok]
-            else:
-                hit_sel = rrows[m[ok]]
-                for c, oc in gather_cols:
-                    targets[oc][hit_rows] = payload[c][hit_sel]
-        for c, oc in gather_cols:
+        for _c, oc in gather_cols:
             out[oc] = targets[oc]
         return out[out_names]
 
@@ -976,9 +840,8 @@ def choose_asof_strategy(right: DataFrame, broadcast_max_rows: int = 2_000_000) 
     """Right-side size probe for asof_join_auto: one bounded count
     (limit(cap+1).count(), so a huge right side never runs a full count).
     Small -> 'broadcast'; otherwise 'bucketed' — the skew-safe default at
-    scale. 'cogroup' and 'window' are opt-in (see asof_join_auto) because
-    choosing them safely needs per-entity skew knowledge a cheap probe
-    can't give."""
+    scale. 'cogroup' is opt-in (see asof_join_auto) because choosing it
+    safely needs per-entity skew knowledge a cheap probe can't give."""
     n = right.limit(broadcast_max_rows + 1).count()
     return "broadcast" if n <= broadcast_max_rows else "bucketed"
 
@@ -1006,10 +869,9 @@ def asof_join_auto(
     - 'bucketed' (otherwise): the (entity, time-bucket) merge — big right
       sides never cross the driver, and hot entities split across buckets.
 
-    Pass ``strategy`` to force 'broadcast' | 'bucketed' | 'cogroup' |
-    'window' ('cogroup' = per-partition index slices, right for a large
-    stats table with benign entity skew; 'window' = single entity-
-    partitioned window, backward-only, right when entities are small).
+    Pass ``strategy`` to force 'broadcast' | 'bucketed' | 'cogroup'
+    ('cogroup' = per-partition index slices, right for a large stats table
+    with benign entity skew); any other value raises ValueError.
     The choice is recorded on the result as ``df._asof_strategy``.
     """
     chose = False
@@ -1036,14 +898,6 @@ def asof_join_auto(
         out = asof_join(left, right, bucket_width=bucket_width, **kw)
     elif strategy == "cogroup":
         out = asof_join_cogroup(left, right, **kw)
-    elif strategy == "window":
-        if direction != "backward":
-            raise ValueError("window strategy implements backward only")
-        out = asof_join_window(
-            left, right, on=on, by=by, right_cols=right_cols,
-            tolerance=tolerance, suffix=suffix,
-            include_right_on=include_right_on,
-        )
     else:
         raise ValueError(f"unknown asof strategy {strategy!r}")
     if chose:

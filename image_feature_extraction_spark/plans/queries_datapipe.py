@@ -973,25 +973,6 @@ def q_asof_broadcast(spark, sf_dir):
 _register("q_asof_broadcast", q_asof_broadcast, _ASOF_BACKWARD_SQL)
 
 
-def q_asof_window(spark, sf_dir):
-    """Entity-window as-of strategy standalone (single exchange, union +
-    last-ignorenulls fill). Same oracle as q_asof_join."""
-    from ..operators.asof import asof_join_window
-
-    clicks, purchases = _clicks_purchases(spark, sf_dir)
-    out = asof_join_window(clicks, purchases, on="ts", by="user_id")
-    from .queries import _TS_FMT_SPARK
-
-    return out.select(
-        "event_id", "user_id",
-        F.date_format("ts", _TS_FMT_SPARK).alias("ts_s"),
-        "click_value", "purchase_value",
-    ).orderBy("event_id")
-
-
-_register("q_asof_window", q_asof_window, _ASOF_BACKWARD_SQL)
-
-
 def q_checkpoint_ledger(spark, sf_dir):
     """North-rule lineage surface: run a small checkpointed feature job
     (2 source units) into a temp dir, then RESUME it (everything skipped),
@@ -1240,55 +1221,6 @@ _register(
     ORDER BY event_id
     """,
 )
-
-
-def q_flagship_parity(spark, sf_dir):
-    """P7 invariant promoted to a driver-visible CORRECTNESS row (VERDICT
-    r2 #6): the fused single-stage flagship pipeline (synth + as-of match +
-    kernel in ONE mapInArrow pass) must be BIT-IDENTICAL — feature digests
-    AND joined point-in-time stats — to the composed three-operator path
-    (token_table -> asof_join_broadcast -> extract_features). Returns one
-    row of counts; any divergence drops a match count and fails the hash."""
-    from ..plans.flagship import flagship_pipeline
-    from .queries import FLAGSHIP_DOCS, digest_col
-
-    def digested(fused: bool, tag: str):
-        out = flagship_pipeline(spark, FLAGSHIP_DOCS, fused=fused)
-        return out.select(
-            "doc_id",
-            digest_col(F.col("features")).alias(f"digest_{tag}"),
-            F.col("bucket_docs").alias(f"bd_{tag}"),
-            F.col("bucket_mean_len").alias(f"bm_{tag}"),
-        )
-
-    j = digested(True, "f").join(digested(False, "u"), "doc_id", "full_outer")
-    return j.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(
-            F.when(F.col("digest_f") == F.col("digest_u"), 1).otherwise(0)
-        ).cast("long").alias("n_digest_match"),
-        F.sum(
-            F.when(
-                F.col("bd_f").eqNullSafe(F.col("bd_u"))
-                & F.col("bm_f").eqNullSafe(F.col("bm_u")),
-                1,
-            ).otherwise(0)
-        ).cast("long").alias("n_stats_match"),
-    )
-
-
-def _flagship_parity_sql() -> str:
-    from .queries import FLAGSHIP_DOCS
-
-    n = FLAGSHIP_DOCS
-    return f"""
-    SELECT CAST({n} AS BIGINT) AS n_docs,
-           CAST({n} AS BIGINT) AS n_digest_match,
-           CAST({n} AS BIGINT) AS n_stats_match
-    """
-
-
-_register("q_flagship_parity", q_flagship_parity, _flagship_parity_sql)
 
 
 def q_asof_cubic(spark, sf_dir):

@@ -220,18 +220,20 @@ def _cents_half_up(vals):
 
     Fast path: sign-adjusted floor(|v|*100 + 0.5), exact whenever the
     product is not within float error of a half-cent boundary. Near the
-    boundary (|frac - 0.5| <= 1e-6 + 1e-12*|v*100|, generous vs the
-    ~2e-16 relative repr/product gaps) the slow path re-rounds
+    boundary (|frac - 0.5| <= min(1e-6 + 1e-12*|v*100|, 0.499), generous
+    vs the ~2e-16 relative repr/product gaps; the cap keeps huge values,
+    past float64's exact-cents range anyway, off the slow path) it re-rounds
     ``Decimal(repr(v))`` HALF_UP — CPython's repr is the same
     shortest-round-trip decimal Java's Double.toString produces.
     2-decimal labels (the ``encode.cents_sql`` contract) never hit the
-    slow path. Caller masks NaN first (floor(NaN) -> undefined int64).
+    slow path. Callers pass finite values only: the batch cast turns
+    NaN/NULL and ±Inf into NULL, and floor(±Inf) -> undefined int64.
     """
     import numpy as np
 
     p = np.abs(vals) * 100.0
     fast = np.floor(p + 0.5)
-    near = np.abs(p - np.floor(p) - 0.5) <= (1e-6 + 1e-12 * p)
+    near = np.abs(p - np.floor(p) - 0.5) <= np.minimum(1e-6 + 1e-12 * p, 0.499)
     if near.any():
         from decimal import ROUND_HALF_UP, Decimal
 
@@ -348,14 +350,13 @@ def streaming_zscore(
                     }
                 )
             )
-            # Mask NULLs before rounding (streaming_decayed's rule):
-            # np.round(NaN).astype(int64) is undefined garbage that would
-            # permanently corrupt the cents state, and the batch operator's
-            # COUNT(value)/DECIMAL sums skip NULLs.
+            # The batch operator's COUNT(value) skips NULLs but counts
+            # ±Inf, while its DECIMAL(18,2) cast turns ±Inf into NULL, so
+            # the sums skip both. Mask before rounding: a non-finite cent
+            # is undefined int64 garbage that would corrupt the state.
             vals = grp[value].to_numpy(np.float64)
-            ok = ~np.isnan(vals)
-            vc = _cents_half_up(vals[ok])
-            n += int(ok.sum())
+            vc = _cents_half_up(vals[np.isfinite(vals)])
+            n += int((~np.isnan(vals)).sum())
             s_c += int(vc.sum())
             ss_c += int((vc * vc).sum())
         state.update((n, s_c, ss_c))
@@ -538,10 +539,11 @@ def streaming_decayed(
                     }
                 )
             )
+            # COUNT(value) counts ±Inf; the cents cast nulls it
+            # (streaming_zscore's rule)
             vals = grp[value].to_numpy(dtype=np.float64)
-            ok = ~np.isnan(vals)
-            cents[0] += int(_cents_half_up(vals[ok]).sum())
-            cnts[0] += int(ok.sum())
+            cents[0] += int(_cents_half_up(vals[np.isfinite(vals)]).sum())
+            cnts[0] += int((~np.isnan(vals)).sum())
         if base is not None:
             state.update((base, [int(x) for x in cents], [int(x) for x in cnts]))
         yield pd.concat(frames, ignore_index=True)
@@ -796,10 +798,11 @@ def streaming_target_encode(
                     }
                 )
             )
+            # COUNT(label) counts ±Inf; the DECIMAL cast nulls it
+            # (streaming_zscore's rule)
             vals = grp[label].to_numpy(dtype=np.float64)
-            ok = ~np.isnan(vals)
-            cur_cents += int(_cents_half_up(vals[ok]).sum())
-            cur_n += int(ok.sum())
+            cur_cents += int(_cents_half_up(vals[np.isfinite(vals)]).sum())
+            cur_n += int((~np.isnan(vals)).sum())
         state.update(
             (
                 n_prev,

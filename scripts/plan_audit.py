@@ -107,18 +107,17 @@ def main() -> None:
                 for name, err in errors:
                     f.write(f"- {name}: {err}\n")
         print("\nwrote BENCH/PLAN_AUDIT.md")
-        totals = {
-            "queries": len(rows),
-            "pyrow_nonzero": sum(1 for _, c in rows if c["pyrow"]),
-            "errors": len(errors),
-        }
-        print(totals)
-        spark.stop()
-        sys.exit(1 if (totals["pyrow_nonzero"] or errors) else 0)
 
+    # one exit rule for the full audit and named queries alike: any error
+    # or any row-at-a-time Python node fails the run
+    totals = {
+        "queries": len(rows),
+        "pyrow_nonzero": sum(1 for _, c in rows if c["pyrow"]),
+        "errors": len(errors),
+    }
+    print(totals)
     spark.stop()
-    if errors:
-        sys.exit(1)
+    sys.exit(1 if (totals["pyrow_nonzero"] or errors) else 0)
 
 
 if __name__ == "__main__":

@@ -45,10 +45,11 @@ def main() -> None:
         spark.conf.set("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
 
     from image_feature_extraction_spark import synth
-    from image_feature_extraction_spark.operators.asof import asof_join_broadcast
-    from image_feature_extraction_spark.operators.features import extract_features
     from image_feature_extraction_spark.plans import checkpoint as C
-    from image_feature_extraction_spark.plans.flagship import flagship_stats
+    from image_feature_extraction_spark.plans.flagship import (
+        flagship_features,
+        flagship_stats,
+    )
 
     stats = flagship_stats(spark, args.docs)
 
@@ -59,8 +60,7 @@ def main() -> None:
 
     def unit_job(spark_, unit):
         docs = synth.token_table_for_ids(spark_, unit_ids[unit])
-        joined = asof_join_broadcast(docs, stats, on="ts", by="source")
-        return extract_features(joined, scales=scales)
+        return flagship_features(docs, stats, scales)
 
     t0 = time.time()
     result = C.run_checkpointed(spark, args.out, list(synth.SOURCES), unit_job)

@@ -8,7 +8,11 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from image_feature_extraction_spark.operators.asof import asof_join, asof_join_window
+from image_feature_extraction_spark.operators.asof import (
+    asof_join,
+    asof_join_broadcast,
+    asof_join_cogroup,
+)
 from image_feature_extraction_spark.operators.windows import (
     backfill,
     lag_lead,
@@ -78,16 +82,6 @@ def test_asof_bucketed_matches_duckdb(spark, frames):
         pd.testing.assert_frame_equal(got, want, check_dtype=False, atol=1e-12)
 
 
-def test_asof_window_matches_duckdb(spark, frames):
-    left, right, ldf, rdf = frames
-    want = _key(_duck_asof(left, right))
-    got = _key(
-        asof_join_window(ldf, rdf, on="ts", by="entity_id")
-        .toPandas()[["entity_id", "ts", "lval", "rval"]]
-    )
-    pd.testing.assert_frame_equal(got, want, check_dtype=False, atol=1e-12)
-
-
 def test_asof_zero_leakage(spark, frames):
     left, right, ldf, rdf = frames
     out = asof_join(
@@ -142,12 +136,13 @@ def test_asof_tolerance(spark, frames):
         got, _key(want_pd[["entity_id", "ts", "lval", "rval"]]),
         check_dtype=False, atol=1e-12,
     )
-    # window variant with tolerance agrees
-    got_w = _key(
-        asof_join_window(ldf, rdf, on="ts", by="entity_id", tolerance=tol)
-        .toPandas()[["entity_id", "ts", "lval", "rval"]]
-    )
-    pd.testing.assert_frame_equal(got_w, got, check_dtype=False, atol=1e-12)
+    # index strategies with tolerance agree
+    for fn in (asof_join_broadcast, asof_join_cogroup):
+        got_i = _key(
+            fn(ldf, rdf, on="ts", by="entity_id", tolerance=tol)
+            .toPandas()[["entity_id", "ts", "lval", "rval"]]
+        )
+        pd.testing.assert_frame_equal(got_i, got, check_dtype=False, atol=1e-12)
 
 
 def test_asof_on_driver_events(spark):
@@ -362,12 +357,6 @@ def test_flagship_asof_no_leakage_and_matches_pandas(spark):
 
 def test_asof_multi_key_by(spark):
     """Composite entity key (by=[k1,k2]) for all three strategies."""
-    from image_feature_extraction_spark.operators.asof import (
-        asof_join,
-        asof_join_broadcast,
-        asof_join_window,
-    )
-
     rng = np.random.default_rng(42)
     left = pd.DataFrame(
         {
@@ -395,8 +384,8 @@ def test_asof_multi_key_by(spark):
     )[["k1", "k2", "ts", "lv", "rv"]]
     for fn, kw in (
         (asof_join, {"bucket_width": 2500.0}),
-        (asof_join_window, {}),
         (asof_join_broadcast, {}),
+        (asof_join_cogroup, {}),
     ):
         got = (
             fn(ldf, rdf, on="ts", by=["k1", "k2"], **kw)
@@ -448,30 +437,6 @@ def test_asof_bucketed_extreme_skew(spark):
         )[["entity_id", "ts", "lv", "rv"]].rename(columns={"lv": "lval", "rv": "rval"})
     )
     pd.testing.assert_frame_equal(got, want, check_dtype=False, atol=1e-12)
-
-
-def test_flagship_fused_equals_unfused(spark):
-    """The single-stage fused flagship must equal the 3-operator pipeline
-    row for row (features bit-identical, same as-of matches)."""
-    import bench
-
-    n = 300
-    stats = bench.flagship_stats(spark, n)
-    cols = ["doc_id", "bucket_docs", "bucket_mean_len", "features", "n_tok"]
-    a = (
-        bench.flagship_pipeline(spark, n, stats=stats, fused=True)
-        .select(*cols).toPandas().sort_values("doc_id").reset_index(drop=True)
-    )
-    b = (
-        bench.flagship_pipeline(spark, n, stats=stats, fused=False)
-        .select(*cols).toPandas().sort_values("doc_id").reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(
-        a.drop(columns=["features"]), b.drop(columns=["features"]),
-        check_dtype=False,
-    )
-    for x, y in zip(a["features"], b["features"]):
-        np.testing.assert_array_equal(np.asarray(x), np.asarray(y))
 
 
 def test_asof_bucket_boundary_timestamps(spark):
@@ -547,7 +512,8 @@ def test_asof_randomized_property(spark, seed):
     ).df().reset_index(drop=True)
     for fn, kw in (
         (asof_join, {"bucket_width": 997.0}),
-        (asof_join_window, {}),
+        (asof_join_broadcast, {}),
+        (asof_join_cogroup, {}),
     ):
         got = (
             fn(ldf, rdf, on="ts", by="entity_id", **kw)
@@ -625,9 +591,6 @@ def test_asof_duplicate_right_ts_tie_break(spark):
     for fn in (asof_join_broadcast, asof_join_cogroup):
         check(fn(ldf, rdf, on="ts", by="entity_id", direction="forward"), want_fwd)
         check(fn(ldf, rdf, on="ts", by="entity_id", direction="backward"), want_bwd)
-    # window strategy (backward-only): payload columns in the window
-    # ordering pin the duplicate-ts tie-break to struct-max
-    check(asof_join_window(ldf, rdf, on="ts", by="entity_id"), want_bwd)
 
 
 def test_asof_interpolate_manual_and_parity(spark):
@@ -735,7 +698,6 @@ def test_asof_strategy_selector(spark, frames):
         dict(broadcast_max_rows=10_000),          # routes to broadcast
         dict(broadcast_max_rows=10),              # routes to bucketed
         dict(strategy="cogroup"),
-        dict(strategy="window"),
     ):
         out = asof_join_auto(ldf, rdf, on="ts", by="entity_id", **kw)
         got = _key(out.toPandas()[["entity_id", "ts", "lval", "rval"]])
@@ -746,6 +708,16 @@ def test_asof_strategy_selector(spark, frames):
     assert asof_join_auto(
         ldf, rdf, on="ts", by="entity_id", broadcast_max_rows=10
     )._asof_strategy == "bucketed"
+
+
+def test_asof_auto_rejects_unknown_strategy(spark, frames):
+    """Three strategies remain; any other name (including the removed
+    'window') is refused, not silently routed."""
+    from image_feature_extraction_spark.operators.asof import asof_join_auto
+
+    _left, _right, ldf, rdf = frames
+    with pytest.raises(ValueError, match="unknown asof strategy 'window'"):
+        asof_join_auto(ldf, rdf, on="ts", by="entity_id", strategy="window")
 
 
 def test_asof_cogroup_matches_duckdb(spark, frames):
@@ -906,7 +878,7 @@ def test_asof_strategy_direction_matrix(spark, seed):
     """All physical strategies implement identical semantics: for random
     frames (duplicate timestamps included), bucketed (2 widths),
     broadcast, and cogroup agree pairwise on backward / forward / nearest
-    / interpolate; window agrees on backward."""
+    / interpolate."""
     from image_feature_extraction_spark.operators.asof import (
         asof_join_broadcast,
         asof_join_cogroup,
@@ -946,8 +918,6 @@ def test_asof_strategy_direction_matrix(spark, seed):
                                             direction=direction)))
         outs.append(key(asof_join_cogroup(ldf, rdf, on="ts", by="entity_id",
                                           direction=direction)))
-        if direction == "backward":
-            outs.append(key(asof_join_window(ldf, rdf, on="ts", by="entity_id")))
         for i, o in enumerate(outs[1:], 1):
             assert o == outs[0], f"{direction}: variant {i} disagrees"
 

@@ -13,7 +13,7 @@ from image_feature_extraction_spark.operators import text as T
 from image_feature_extraction_spark.operators.asof import (
     asof_join,
     asof_join_broadcast,
-    asof_join_window,
+    asof_join_cogroup,
 )
 from image_feature_extraction_spark.operators.features import extract_features
 from image_feature_extraction_spark.operators.windows import sessionize
@@ -35,8 +35,8 @@ def test_asof_empty_right_all_strategies(spark):
     )
     for fn, kw in (
         (asof_join, {"bucket_width": 100.0}),
-        (asof_join_window, {}),
         (asof_join_broadcast, {}),
+        (asof_join_cogroup, {}),
     ):
         out = fn(left, right, on="ts", by="entity_id", **kw).toPandas()
         assert len(out) == 2
@@ -48,8 +48,8 @@ def test_asof_single_rows(spark):
     right = spark.createDataFrame(pd.DataFrame({"entity_id": [1], "ts": [10], "rv": [9.0]}))
     for fn, kw in (
         (asof_join, {"bucket_width": 100.0}),
-        (asof_join_window, {}),
         (asof_join_broadcast, {}),
+        (asof_join_cogroup, {}),
     ):
         out = fn(left, right, on="ts", by="entity_id", **kw).toPandas()
         assert out["rv"].tolist() == [9.0]  # inclusive equal-ts match
@@ -171,7 +171,6 @@ def test_asof_null_timestamps_never_match(spark):
     )
     for fn, kw in (
         (asof_join, {"bucket_width": 100.0}),
-        (asof_join_window, {}),
         (asof_join_broadcast, {}),
         (asof_join_cogroup, {}),
     ):
@@ -220,7 +219,6 @@ def test_asof_null_payload_tie_break_parity(spark):
     )
     for fn, kw in (
         (asof_join, {"bucket_width": 100.0}),
-        (asof_join_window, {}),
         (asof_join_broadcast, {}),
         (asof_join_cogroup, {}),
     ):
@@ -229,8 +227,9 @@ def test_asof_null_payload_tie_break_parity(spark):
 
 
 def test_asof_window_fill_single_winning_row(spark):
-    """The winning right row's null field must stay null — per-column
-    fills would substitute the value from an EARLIER row (frankenrow)."""
+    """The winning right row's null field must stay null in every
+    strategy — per-column fills would substitute the value from an
+    EARLIER row (frankenrow)."""
     left = spark.createDataFrame(
         pd.DataFrame({"entity_id": [1], "ts": [25.0], "lv": [0.0]})
     )
@@ -244,9 +243,14 @@ def test_asof_window_fill_single_winning_row(spark):
             }
         )
     )
-    out = asof_join_window(left, right, on="ts", by="entity_id").toPandas()
-    assert out["a"].iloc[0] == 3.0
-    assert pd.isna(out["b"].iloc[0])  # NOT 2.0 from the ts=10 row
+    for fn, kw in (
+        (asof_join, {"bucket_width": 100.0}),
+        (asof_join_broadcast, {}),
+        (asof_join_cogroup, {}),
+    ):
+        out = fn(left, right, on="ts", by="entity_id", **kw).toPandas()
+        assert out["a"].iloc[0] == 3.0, fn.__name__
+        assert pd.isna(out["b"].iloc[0]), fn.__name__  # NOT 2.0 from ts=10
 
 
 def test_gaussian_smooth_null_ts_and_entity(spark):
@@ -554,7 +558,6 @@ def test_asof_null_entity_keys_never_match_all_strategies(spark):
     )
     for fn, kw in (
         (asof_join, {"bucket_width": 100.0}),
-        (asof_join_window, {}),
         (asof_join_broadcast, {}),
         (asof_join_cogroup, {}),
     ):
@@ -717,7 +720,7 @@ def test_auto_bucketed_routing_check_survives_dash_O(spark, monkeypatch):
     from image_feature_extraction_spark.operators import asof as A
     from image_feature_extraction_spark.plans import queries_datapipe as QD
 
-    monkeypatch.setattr(A, "choose_asof_strategy", lambda *a, **k: "window")
+    monkeypatch.setattr(A, "choose_asof_strategy", lambda *a, **k: "cogroup")
     with pytest.raises(RuntimeError, match="auto strategy probe"):
         QD.q_asof_auto_bucketed(spark, "/root/testdata/sf0.001")
 

@@ -140,14 +140,6 @@ CASES = {
         ),
         1, 1, "one running-sum exchange on the group key",
     ),
-    "asof_join_window": (
-        lambda s: AS.asof_join_window(
-            _events(s),
-            _events(s).withColumnRenamed("value", "rv").drop("id"),
-            on="ts", by="ent",
-        ),
-        1, 1, "union + last(ignorenulls): one shuffle, one window",
-    ),
     "mode_label": (
         lambda s: LB.mode_label(
             s.createDataFrame(

@@ -746,8 +746,8 @@ def test_streaming_twins_null_ts_parity(spark, tmp_path):
 @pytest.mark.parametrize("seed", [13, 4242])
 def test_streaming_twins_fuzz_vs_batch(spark, tmp_path, seed):
     """Randomized ordered-arrival fuzz: all four encoder twins == their
-    batch operators on a random event table with NULL ts/values,
-    duplicate timestamps, and multiple entities, split into 3
+    batch operators on a random event table with NULL ts/values, ±Inf
+    values, duplicate timestamps, and multiple entities, split into 3
     time-ordered micro-batches (NULL-ts rows salted into every slice)."""
     import datetime as dt
     import time as _time
@@ -776,6 +776,9 @@ def test_streaming_twins_fuzz_vs_batch(spark, tmp_path, seed):
                       for _ in range(n)],
         }
     )
+    # 3% ±Inf: COUNT(value) counts them, the DECIMAL(18,2) cast nulls them
+    inf_at = rng.choice(n, 12, replace=False)
+    pdf.loc[inf_at, "value"] = np.where(np.arange(12) % 2, -np.inf, np.inf)
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")
     df = spark.createDataFrame(pdf).selectExpr(
         "event_id", "user_id", "event_type",
