@@ -299,7 +299,13 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", n: int = 1,
     the skew risk at scale; mitigate with n >= 3 shingles (rarer) or a
     document-frequency cap filter before the join.
     """
-    sh = shingles(df, text_col, n)
+    return _jaccard_pairs(shingles(df, text_col, n), threshold)
+
+
+def _jaccard_pairs(sh: DataFrame, threshold: float) -> DataFrame:
+    """Jaccard pairs over a distinct (doc_id, shingle) frame: shingle
+    self-join for the common count, per-doc sizes for the union.
+    Output: (doc_a, doc_b, common, jaccard), jaccard >= threshold."""
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     common = (
@@ -335,7 +341,7 @@ def embedding_neardup_pairs(df: DataFrame, vec_col: str = "embedding",
     its rows x all-later-rows similarities vectorized (float64 BLAS), and
     emits pairs >= threshold. O(n^2 d) flops but Arrow/numpy speed — the
     verification shape for a candidate set. Beyond max_broadcast_rows,
-    bucket first (similarity.hyperplane_buckets) and run this per bucket.
+    bucket first (LSH hyperplane buckets) and run this per bucket.
 
     Cosine rounded to 6 decimals; numpy's blocked float64 sums agree with
     the DuckDB oracle's sequential sums to ~1 ulp, far inside the rounding
@@ -406,7 +412,7 @@ def embedding_neardup_pairs_bucketed(
     block_rows: int = 1024,
 ) -> DataFrame:
     """Embedding near-dup at corpus sizes above broadcast: multi-table
-    hyperplane LSH bucketing (similarity.hyperplane_buckets) -> per-
+    hyperplane LSH bucketing (similarity._table_buckets) -> per-
     (table, bucket) blocked float64 matmul -> distinct pairs.
 
     Nothing ever concentrates on the driver: the only shuffles are the
@@ -428,13 +434,13 @@ def embedding_neardup_pairs_bucketed(
     from ..session import widen_small_scan
     from .similarity import _table_buckets
 
-    # the per-table hyperplane bucket-id projection (Catalyst lambda dot
-    # products x n_tables) runs BEFORE the (tbl, bkt) exchange — on a
-    # sub-split input file it would execute on one core (VERDICT r2 #5)
+    # the per-table hyperplane bucket-id projection runs BEFORE the
+    # (tbl, bkt) exchange — on a sub-split input file it would execute on
+    # one core (VERDICT r2 #5)
     df = widen_small_scan(df)
     if dim is None:
-        # dim must match the vectors: a wrong dim makes every hyperplane
-        # dot null -> every row lands in bucket 0 -> one all-pairs task
+        # the hyperplanes need the vectors' length; the bucketing UDF
+        # raises ValueError on any vector of another length
         first = df.select(F.size(vec_col).alias("d")).first()
         if first is None:
             dim = 1  # empty corpus; any value works

@@ -3,19 +3,23 @@
 - ``cosine_topk``: brute-force exact top-k — the correctness baseline.
   Query set x corpus as a keyed join; at 10^12 corpus rows this is the
   verification path for a candidate set, not the primary search.
-- ``hyperplane_buckets`` / ``lsh_topk``: random-hyperplane (sign) LSH —
-  the scale path. Bucket = sign bits of h fixed hyperplanes; search cost
-  drops from O(corpus) to O(bucket) per query with recall controlled by
-  the number of hyperplanes/tables.
+- ``lsh_topk``: random-hyperplane (sign) LSH — the scale path. Bucket =
+  sign bits of h fixed hyperplanes; search cost drops from O(corpus) to
+  O(bucket) per query with recall controlled by the number of
+  hyperplanes/tables.
+- ``ivf_topk``: k-means inverted-file ANN (see the IVF section below).
 
 Hyperplane coefficients are md5-derived +-1 (deterministic, engine
 portable) — cosine-of-signs LSH needs only direction-uniform hyperplanes,
 and Rademacher +-1 vectors are direction-uniform enough in 64-D while
 staying exactly representable in SQL for the DuckDB oracle.
 
-All float math is float64 with sequential left-to-right sums so the
-DuckDB oracle (list_cosine_similarity / list_dot_product on DOUBLE[])
-agrees bitwise.
+All vector math runs in numpy on float64, one Arrow batch at a time:
+``_stack`` is the one batch-stacking step, ``_table_buckets`` the one
+hyperplane projection and ``_row_cosine`` the one cosine. Projection dots
+sum left to right, so bucket ids are bit-identical to the DuckDB oracle's
+list_dot_product; cosines agree with list_cosine_similarity after the
+6-decimal rounding every output applies.
 """
 
 from __future__ import annotations
@@ -41,54 +45,36 @@ def hyperplane_coeffs(n_planes: int, dim: int, table: int = 0) -> list[list[floa
     return out
 
 
-def _dot(vec_col, coeffs: list[float]):
-    arr = F.array(*[F.lit(c) for c in coeffs])
-    return F.aggregate(
-        F.zip_with(vec_col, arr, lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _cosine(va, vb):
-    dot = F.aggregate(
-        F.zip_with(va, vb, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    n = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    return dot / (n(va) * n(vb))
+def _stack(v: pd.Series, dim: int | None = None) -> tuple[np.ndarray, np.ndarray]:
+    """(ok, M): ok masks the non-null vectors of `v`, M stacks them as
+    float64 rows. Every vector must have length `dim` (default: the first
+    vector's length); a mismatch raises ValueError naming both lengths."""
+    ok = v.notna().to_numpy()
+    rows = [np.asarray(x, dtype=np.float64) for x in v[ok]]
+    if dim is None:
+        dim = len(rows[0]) if rows else 0
+    for x in rows:
+        if len(x) != dim:
+            raise ValueError(f"vector has length {len(x)}, expected dim={dim}")
+    return ok, (np.stack(rows) if rows else np.empty((0, dim)))
 
 
 def _cosine_blas_udf():
     """Arrow-vectorized (pandas_udf) exact cosine: one numpy einsum per
-    batch instead of one interpreted Catalyst lambda per array element —
-    ~an order of magnitude faster on the candidate-rescore hot path. Same
-    float64 math as _cosine up to summation order (values agree to ~1 ulp;
-    both variants round to 6 decimals downstream)."""
+    batch instead of one interpreted expression per array element."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
     def cos(qa: pd.Series, cb: pd.Series) -> pd.Series:
-        if not len(qa):
-            return pd.Series(dtype="float64")
-        # null vectors -> null cosine (the Catalyst path's behavior);
-        # np.stack over a batch containing None would raise instead.
+        okq, Q = _stack(qa)
+        okc, C = _stack(cb, Q.shape[1] if len(Q) else None)
+        ok = okq & okc
         # The not-ok rows must be None (NULL), NOT NaN: NaN sorts ABOVE
         # every real cosine under F.desc, so a NaN would rank null-vector
         # candidates first, while SQL NULL sorts last like the oracle.
-        ok = qa.notna().to_numpy() & cb.notna().to_numpy()
         out = np.full(len(qa), None, dtype=object)
         if ok.any():
-            Q = np.stack([np.asarray(v, dtype=np.float64) for v in qa[ok]])
-            C = np.stack([np.asarray(v, dtype=np.float64) for v in cb[ok]])
-            out[ok] = _row_cosine(Q, C)
+            out[ok] = _row_cosine(Q[ok[okq]], C[ok[okc]])
         return pd.Series(out, dtype=object)
 
     return cos
@@ -105,31 +91,10 @@ def _row_cosine(Q: np.ndarray, C: np.ndarray) -> np.ndarray:
     return dot / (nq * nc)
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Exact top-k by cosine per query vector. Deterministic tie-break:
-    (cosine desc, neighbor id asc). Self-matches (same id) excluded.
-
-    Output: (query_id, rank, neighbor_id, cosine)."""
-    q = queries.select(
-        F.col(query_id_col), F.col(vec_col).alias("_qv")
-    )
-    from ..session import widen_small_scan
-
-    c = widen_small_scan(corpus).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-    )
-    scored = (
-        q.crossJoin(c)
-        .where(F.col(query_id_col) != F.col("neighbor_id"))
-        .withColumn("cosine", _cosine(F.col("_qv"), F.col("_cv")))
-    )
+def _rank_topk(scored: DataFrame, k: int, query_id_col: str) -> DataFrame:
+    """Top-k per query by (cosine desc, neighbor id asc); NULL cosines
+    (null vectors) rank last. Output: (query_id, rank, neighbor_id,
+    cosine rounded to 6 decimals)."""
     w = Window.partitionBy(query_id_col).orderBy(
         F.desc("cosine"), F.asc("neighbor_id")
     )
@@ -140,64 +105,46 @@ def cosine_topk(
     )
 
 
-def hyperplane_buckets(
-    df: DataFrame,
-    n_planes: int = 8,
-    dim: int = 64,
+def cosine_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
     vec_col: str = "embedding",
-    table: int = 0,
-    out_col: str = "bucket",
+    id_col: str = "vec_id",
+    query_id_col: str = "query_id",
 ) -> DataFrame:
-    """Append an LSH bucket id for one hash table: bit p set iff
-    dot(vec, plane_p) > 0."""
-    coeffs = hyperplane_coeffs(n_planes, dim, table)
-    bucket = None
-    for p, row in enumerate(coeffs):
-        bit = F.when(_dot(F.col(vec_col), row) > 0, F.lit(1 << p)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    return df.withColumn(out_col, bucket.cast("long"))
+    """Exact top-k by cosine per query vector: every (query, corpus) pair
+    is scored. Deterministic tie-break: (cosine desc, neighbor id asc).
+    Self-matches (same id) excluded.
 
-
-def _table_buckets(df: DataFrame, n_tables, n_planes, dim, vec_col,
-                   method: str = "sql"):
-    """(table_idx, bucket) exploded rows — one row per (input row, table).
-
-    method="sql": Catalyst higher-order-function dots — sequential sums,
-    bitwise-identical to the DuckDB oracle's list_dot_product.
-    method="blas": one numpy matmul per Arrow batch against the (dim x
-    tables*planes) coefficient matrix — the production hot path. Same
-    sign decisions except a dot within ~1 ulp of exactly 0 (probability
-    ~1e-13 per dot for random embeddings).
-
-    Rows with a null vector are excluded from every table (they have no
-    bucket; the previous sql behavior silently put them in bucket 0).
-    """
+    Output: (query_id, rank, neighbor_id, cosine)."""
+    q = queries.select(
+        F.col(query_id_col), F.col(vec_col).alias("_qv")
+    )
     from ..session import widen_small_scan
 
-    df = widen_small_scan(df).where(F.col(vec_col).isNotNull())
-    if method == "blas":
-        return _table_buckets_blas(df, n_tables, n_planes, dim, vec_col)
-    out = df
-    for t in range(n_tables):
-        out = hyperplane_buckets(out, n_planes, dim, vec_col, table=t, out_col=f"_b{t}")
-    pairs = F.array(
-        *[
-            F.struct(F.lit(t).alias("tbl"), F.col(f"_b{t}").alias("bkt"))
-            for t in range(n_tables)
-        ]
+    c = widen_small_scan(corpus).select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
     )
-    return (
-        out.withColumn("_tb", F.explode(pairs))
-        .select(
-            *[c for c in df.columns],
-            F.col("_tb.tbl").alias("tbl"),
-            F.col("_tb.bkt").alias("bkt"),
-        )
+    cos = _cosine_blas_udf()
+    scored = (
+        q.crossJoin(c)
+        .where(F.col(query_id_col) != F.col("neighbor_id"))
+        .withColumn("cosine", cos(F.col("_qv"), F.col("_cv")))
     )
+    return _rank_topk(scored, k, query_id_col)
 
 
-def _table_buckets_blas(df: DataFrame, n_tables, n_planes, dim, vec_col):
+def _table_buckets(df: DataFrame, n_tables, n_planes, dim, vec_col):
+    """(tbl, bkt) exploded rows — one row per (input row, hash table).
+    Bit p of a table's bucket is set iff dot(vec, plane_p) > 0.
+
+    Rows with a null vector are excluded from every table (they have no
+    bucket). A vector whose length is not `dim` raises ValueError.
+    """
     from pyspark.sql.functions import pandas_udf
+
+    from ..session import widen_small_scan
 
     W = (
         np.array(
@@ -211,13 +158,17 @@ def _table_buckets_blas(df: DataFrame, n_tables, n_planes, dim, vec_col):
 
     @pandas_udf("array<long>")
     def buckets(v: pd.Series) -> pd.Series:
-        if not len(v):
-            return pd.Series(dtype=object)
-        M = np.stack([np.asarray(x, dtype=np.float64) for x in v])
-        bits = (M @ W > 0).reshape(len(M), n_tables, n_planes)
-        bkt = (bits * weights).sum(axis=2)  # (batch, tables)
-        return pd.Series(list(bkt))
+        _, M = _stack(v, dim)  # null vectors were filtered out below
+        # Sum over dim left to right rather than M @ W: BLAS may reorder
+        # the sum and flip the sign of a dot that cancels to ~0, while
+        # this order is the oracle's list_dot_product order, bit for bit.
+        acc = np.zeros((len(M), W.shape[1]))
+        for d in range(dim):
+            acc += M[:, d, None] * W[d]
+        bits = (acc > 0).reshape(len(M), n_tables, n_planes)
+        return pd.Series(list((bits * weights).sum(axis=2)), dtype=object)
 
+    df = widen_small_scan(df).where(F.col(vec_col).isNotNull())
     return (
         df.withColumn("_bkts", buckets(F.col(vec_col)))
         .select(
@@ -237,8 +188,6 @@ def lsh_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
-    rescore: str = "sql",
-    bucketing: str | None = None,
 ) -> DataFrame:
     """Approximate top-k with MULTI-TABLE hyperplane LSH: candidates are
     the union over `n_tables` independent tables of same-bucket matches
@@ -248,28 +197,11 @@ def lsh_topk(
     to collide. Cost per query is the union of its bucket sizes, never the
     corpus.
 
-    rescore="sql" (default) scores candidates with the Catalyst
-    higher-order-function cosine — sequential sums, bitwise-identical to
-    the DuckDB oracle. rescore="blas" scores with an Arrow-vectorized
-    numpy einsum (pandas_udf) — same math up to summation order, the
-    production hot path (measured speedup in BENCH).
-
-    bucketing independently selects the candidate-generation method
-    (defaults to follow `rescore`, which is where the measured 5.6x
-    mostly comes from). NOTE: blas bucketing can flip a hyperplane sign
-    when a dot sits within ~1 ulp of exactly 0 (~1e-13 probability per
-    dot), changing the candidate set vs the sql oracle; pass
-    bucketing="sql", rescore="blas" for oracle-identical candidates with
-    a fast rescore.
-
     Output: (query_id, rank, neighbor_id, cosine)."""
-    assert rescore in ("sql", "blas")
-    bucketing = bucketing or rescore
-    assert bucketing in ("sql", "blas")
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
     q = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qv"))
-    cb = _table_buckets(c, n_tables, n_planes, dim, "_cv", method=bucketing)
-    qb = _table_buckets(q, n_tables, n_planes, dim, "_qv", method=bucketing)
+    cb = _table_buckets(c, n_tables, n_planes, dim, "_cv")
+    qb = _table_buckets(q, n_tables, n_planes, dim, "_qv")
     # Dedup on IDS ONLY — running distinct over rows that carry the
     # vectors would shuffle every embedding n_tables times; the vectors
     # are joined back once per unique candidate pair instead.
@@ -281,19 +213,9 @@ def lsh_topk(
         .distinct()
     )
     cand = cand_ids.join(q, query_id_col).join(c, "neighbor_id")
-    if rescore == "blas":
-        cos = _cosine_blas_udf()
-        scored = cand.withColumn("cosine", cos(F.col("_qv"), F.col("_cv")))
-    else:
-        scored = cand.withColumn("cosine", _cosine(F.col("_qv"), F.col("_cv")))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
-    )
+    cos = _cosine_blas_udf()
+    scored = cand.withColumn("cosine", cos(F.col("_qv"), F.col("_cv")))
+    return _rank_topk(scored, k, query_id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -343,7 +265,7 @@ def kmeans_centroids(
             f"kmeans_centroids: sample has {len(rows)} usable vectors, "
             f"need at least n_lists={n_lists}"
         )
-    X = np.stack([np.asarray(v, dtype=np.float64) for v in rows["_v"]])
+    _, X = _stack(rows["_v"])
     return _kmeans_np(X, n_lists, iters)
 
 
@@ -397,10 +319,9 @@ def assign_ivf_lists(
     @pandas_udf("long")
     def assign(v: pd.Series) -> pd.Series:
         C_ = b_c.value
-        ok = v.notna().to_numpy()
+        ok, M = _stack(v, C_.shape[1])
         out = np.full(len(v), None, dtype=object)
         if ok.any():
-            M = np.stack([np.asarray(x, dtype=np.float64) for x in v[ok]])
             out[ok] = np.argmax(M @ C_.T, axis=1).astype(np.int64)
         return pd.Series(out, dtype=object)
 
@@ -453,10 +374,9 @@ def ivf_topk(
     @pandas_udf("array<long>")
     def probes(v: pd.Series) -> pd.Series:
         C_ = b_c.value
-        ok = v.notna().to_numpy()
+        ok, M = _stack(v, C_.shape[1])
         out = np.full(len(v), None, dtype=object)
         if ok.any():
-            M = np.stack([np.asarray(x, dtype=np.float64) for x in v[ok]])
             sims = M @ C_.T
             # stable argsort of -sims: ties go to the lower list id
             top = np.argsort(-sims, axis=1, kind="stable")[:, :np_probe]
@@ -479,14 +399,4 @@ def ivf_topk(
         .where(F.col(query_id_col) != F.col("neighbor_id"))
         .withColumn("cosine", cos(F.col("_qv"), F.col("_cv")))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            query_id_col, "rank", "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-        )
-    )
+    return _rank_topk(scored, k, query_id_col)

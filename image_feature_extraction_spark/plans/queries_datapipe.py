@@ -223,7 +223,10 @@ def _bucket_expr_sql(table: int, n_planes: int = _LSH_PLANES, dim: int = 64) -> 
 
 def q_knn_lsh(spark, sf_dir):
     """Approximate top-5 via multi-table hyperplane LSH (8 tables x 6
-    planes), exact cosine rescoring of the candidate union."""
+    planes), exact cosine rescoring of the candidate union. The oracle
+    rebuilds the buckets with list_dot_product over the same hyperplane
+    constants; the operator's left-to-right dot sums make them
+    bit-identical."""
     e = _t(spark, sf_dir, "embeddings")
     return S.lsh_topk(
         e, _query_vectors(spark, sf_dir), k=5,
@@ -263,24 +266,6 @@ def _lsh_sql() -> str:
 
 
 _register("q_knn_lsh", q_knn_lsh, _lsh_sql())
-
-
-def q_knn_lsh_blas(spark, sf_dir):
-    """Same LSH search on the all-BLAS path: numpy-matmul BUCKETING and
-    rescore (where the measured 5.6x comes from). Bucket sign decisions
-    agree with the Catalyst/SQL oracle except a hyperplane dot within
-    ~1 ulp of exactly 0 (~1e-13/dot), and rescored cosines agree after
-    rounding — hash-exact vs the same SQL oracle at this SF (verified);
-    `bucketing="sql", rescore="blas"` is the strictly-oracle-identical
-    variant."""
-    e = _t(spark, sf_dir, "embeddings")
-    return S.lsh_topk(
-        e, _query_vectors(spark, sf_dir), k=5,
-        n_planes=_LSH_PLANES, n_tables=_LSH_TABLES, dim=64, rescore="blas",
-    ).orderBy("query_id", "rank")
-
-
-_register("q_knn_lsh_blas", q_knn_lsh_blas, _lsh_sql())
 
 
 def q_dedup_embedding_bucketed(spark, sf_dir):
@@ -1040,38 +1025,13 @@ def q_dedup_jaccard_capped(spark, sf_dir):
     by k docs creates k^2 join rows, so ubiquitous shingles are excluded
     from the metric itself (consistently from numerator AND denominator).
     Exact SQL mirror; word unigrams are usable again under the cap."""
-    from ..operators.dedup import hot_shingles, shingles as mk_shingles
-
     d = _t(spark, sf_dir, "documents")
-    sh = mk_shingles(d, n=1)
+    sh = D.shingles(d, n=1)
     # anti-join against the SMALL hot set (df > 50), never a join against
     # the huge rare set — at web scale "rare" is nearly the whole
     # vocabulary while "hot" is a handful of stopword-ish shingles
-    sh = sh.join(F.broadcast(hot_shingles(sh, 50)), "shingle", "left_anti")
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    out = (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("common").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("common")).cast("double"),
-        )
-        .where(F.col("jaccard") >= 0.5)
-    )
-    return out.select("doc_a", "doc_b", "common", "jaccard").orderBy("doc_a", "doc_b")
+    sh = sh.join(F.broadcast(D.hot_shingles(sh, 50)), "shingle", "left_anti")
+    return D._jaccard_pairs(sh, 0.5).orderBy("doc_a", "doc_b")
 
 
 _register(

@@ -113,15 +113,15 @@ def test_lsh_same_vector_same_bucket_and_subset_of_brute(spark):
         [(i, v.tolist()) for i, v in zip(ids, vecs)],
         "vec_id long, embedding array<float>",
     )
-    b = S.hyperplane_buckets(df, n_planes=6, dim=16).toPandas()
+    b = S._table_buckets(df, 1, 6, 16, "embedding").toPandas()
     # a vector joined with itself lands in its own bucket (determinism)
-    b2 = S.hyperplane_buckets(df, n_planes=6, dim=16).toPandas()
+    b2 = S._table_buckets(df, 1, 6, 16, "embedding").toPandas()
     pd.testing.assert_frame_equal(
-        b.sort_values("vec_id").reset_index(drop=True)[["vec_id", "bucket"]],
-        b2.sort_values("vec_id").reset_index(drop=True)[["vec_id", "bucket"]],
+        b.sort_values("vec_id").reset_index(drop=True)[["vec_id", "tbl", "bkt"]],
+        b2.sort_values("vec_id").reset_index(drop=True)[["vec_id", "tbl", "bkt"]],
     )
     # most same-cluster members share a bucket (tight clusters, 6 planes)
-    b = b.set_index("vec_id")["bucket"]
+    b = b.set_index("vec_id")["bkt"]
     same = sum(
         b.loc[c * 8] == b.loc[c * 8 + j] for c in range(5) for j in range(1, 8)
     )
@@ -210,7 +210,7 @@ def test_lsh_recall_vs_bruteforce_on_driver_embeddings(spark):
 
 
 # ---------------------------------------------------------------------------
-# Round 2: bucketed embedding near-dup, BLAS LSH, capped minhash, mode_label
+# Round 2: bucketed embedding near-dup, LSH bucketing, capped minhash, mode_label
 # ---------------------------------------------------------------------------
 
 def test_embedding_neardup_bucketed_subset_and_autofallback(spark):
@@ -231,17 +231,67 @@ def test_embedding_neardup_bucketed_subset_and_autofallback(spark):
     assert key(auto.toPandas()) == key(bucketed)
 
 
-def test_lsh_topk_blas_matches_sql_rescore(spark):
-    e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    q = e.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
+def test_table_buckets_sum_left_to_right_on_cancelling_doubles(spark):
+    """Bucket bits come from a left-to-right sum over dim, the order of
+    the DuckDB oracle's list_dot_product: on array<double> inputs whose
+    products cancel (1e16 + small - 1e16) any other summation order can
+    flip a sign. Reference: a pure-Python sequential sum."""
+    n_tables, n_planes, dim = 2, 4, 8
+    coeffs = [S.hyperplane_coeffs(n_planes, dim, t) for t in range(n_tables)]
+    c0 = coeffs[0][0]
+    vecs = []
+    for small in (1.0, -1.0, 3.0, -3.0, 0.5):
+        for i, j, k in ((0, 1, 2), (1, 0, 2), (0, 2, 1), (2, 1, 0)):
+            v = [0.0] * dim
+            # products with plane 0 read 1e16, small, -1e16 at i, j, k
+            v[i], v[j], v[k] = 1e16 * c0[i], small * c0[j], -1e16 * c0[k]
+            vecs.append(v)
+    rng = np.random.default_rng(3)
+    vecs += rng.normal(size=(20, dim)).tolist()
+    df = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<double>"
     )
-    a = S.lsh_topk(e, q, k=5, n_planes=6, n_tables=4, dim=64).toPandas()
-    b = S.lsh_topk(e, q, k=5, n_planes=6, n_tables=4, dim=64, rescore="blas").toPandas()
-    pd.testing.assert_frame_equal(
-        a.sort_values(["query_id", "rank"]).reset_index(drop=True),
-        b.sort_values(["query_id", "rank"]).reset_index(drop=True),
+    # one vector per Arrow batch: a matmul over a 1-row batch may take a
+    # BLAS kernel that sums in another order
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        got = S._table_buckets(df, n_tables, n_planes, dim, "embedding").toPandas()
+    finally:
+        spark.conf.set(key, old)
+
+    def ref_bucket(v, planes):
+        bkt = 0
+        for p, row in enumerate(planes):
+            acc = 0.0
+            for x, c in zip(v, row):
+                acc += x * c
+            bkt += (1 << p) if acc > 0 else 0
+        return bkt
+
+    want = {
+        (i, t): ref_bucket(v, coeffs[t])
+        for i, v in enumerate(vecs)
+        for t in range(n_tables)
+    }
+    assert len(got) == len(want)
+    assert {(r.vec_id, r.tbl): r.bkt for r in got.itertuples()} == want
+
+
+def test_vector_path_wrong_dim_raises(spark):
+    """A vector whose length is not `dim` fails with a ValueError naming
+    both lengths; a wrong dim must never hash every row to one bucket."""
+    df = spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.0, 2.0]) for i in range(6)],
+        "vec_id long, embedding array<double>",
     )
+    q = df.select(F.col("vec_id").alias("query_id"), "embedding")
+    msg = r"ValueError: vector has length 4, expected dim=3"
+    with pytest.raises(Exception, match=msg):
+        S._table_buckets(df, 1, 4, 3, "embedding").collect()
+    with pytest.raises(Exception, match=msg):
+        S.lsh_topk(df, q, k=2, n_planes=2, n_tables=2, dim=3).collect()
 
 
 def test_minhash_capped_drops_hot_shingles(spark):

@@ -309,11 +309,15 @@ def test_lsh_null_vectors_and_blas_guard(spark):
     q = e.where(F.col("vec_id") == 1).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    for kw in ({}, {"rescore": "blas"}, {"rescore": "blas", "bucketing": "sql"}):
-        out = S2.lsh_topk(e, q, k=3, n_planes=2, n_tables=2, dim=2, **kw).toPandas()
-        # the null-vector row is excluded, never crashes the job
-        assert 3 not in set(out["neighbor_id"])
-        assert len(out) >= 1
+    out = S2.lsh_topk(e, q, k=3, n_planes=2, n_tables=2, dim=2).toPandas()
+    # the null-vector row is excluded, never crashes the job
+    assert 3 not in set(out["neighbor_id"])
+    assert len(out) >= 1
+    # brute force scores every pair: the null vector gets a NULL cosine,
+    # which ranks after every real one
+    brute = S2.cosine_topk(e, q, k=3).toPandas().sort_values("rank")
+    assert brute["neighbor_id"].tolist() == [2, 4, 3]
+    assert brute["cosine"].isna().tolist() == [False, False, True]
 
 
 def test_equalized_edges_cap_is_uniform_not_value_blocked(spark):
@@ -674,8 +678,8 @@ def test_widen_small_scan_many_tiny_files(spark, tmp_path):
 
 def test_blas_cosine_null_vector_is_null_not_nan(spark):
     """ADVICE r2: the BLAS cosine must return NULL (sorts last under
-    F.desc) for null vectors, not NaN (sorts first) — parity with the
-    Catalyst path even when called outside the bucketed flow."""
+    F.desc) for null vectors, not NaN (sorts first) — parity with SQL
+    NULL ordering even when called outside the bucketed flow."""
     from image_feature_extraction_spark.operators.similarity import _cosine_blas_udf
 
     df = spark.createDataFrame(

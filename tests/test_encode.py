@@ -858,3 +858,27 @@ def test_expanding_robust_stats_history_cap_enforced(spark):
         .orderBy("id").toPandas()
     )
     pd.testing.assert_frame_equal(a, b)
+
+
+def test_expanding_robust_stats_guard_survives_into_executed_plan(spark):
+    """The history cap is pinned by the plan text, not by optimizer luck:
+    Spark rewrites assert_true to raise_error, which must survive into
+    the executed plan when max_history_rows is set and be absent when the
+    guard is disabled (max_history_rows=None)."""
+    import datetime as dt
+
+    rows = [
+        (i, 1, dt.datetime(2024, 1, 1) + dt.timedelta(hours=i), float(i))
+        for i in range(4)
+    ]
+    df = spark.createDataFrame(
+        rows, "id long, ent long, ts timestamp, value double"
+    )
+    kw = dict(by="ent", ts="ts", value="value", id_col="id")
+
+    def executed(cap):
+        out = EN.expanding_robust_stats(df, **kw, max_history_rows=cap)
+        return out._jdf.queryExecution().executedPlan().toString()
+
+    assert "raise_error" in executed(5)
+    assert "raise_error" not in executed(None)
