@@ -53,7 +53,7 @@ NUM_FEATURES = len(FEATURE_NAMES)
 DEFAULT_SCALES = (1.0, 2.0)
 
 # Cache-blocking budget for batched cube processing (cells per chunk); see
-# batch_feature_vectors. 8192 cells * 8 B * ~30 temporaries ~= 2 MB working
+# batch_feature_counts. 8192 cells * 8 B * ~30 temporaries ~= 2 MB working
 # set per (chunk, scale) — L2/L3-resident on current server cores.
 CHUNK_CELLS = 8192
 
@@ -312,37 +312,68 @@ def normalized_convolution(img: np.ndarray, cert: np.ndarray, sigma: float) -> n
     return np.where(ok, num / np.where(ok, den, 1.0), np.asarray(0.0, dtype=num.dtype))
 
 
-def emphysema_features_fg(
+def feature_columns(
     img: np.ndarray,
     cert: np.ndarray,
     sigma: float,
     rows: np.ndarray,
     cols: np.ndarray,
-) -> np.ndarray:
-    """Per-cell 8-feature values at FOREGROUND cells only, for batched
-    cubes (B,s,s,s): the stencil stages (smoothing, gradient, Hessian)
-    need the full cube, but the pointwise eigen stage — the most
-    expensive — runs only on the (rows, cols) flat-index selection.
-    Returns (len(rows), 8) in FEATURE_NAMES order, bit-identical to
-    gathering emphysema_features(...) at the same cells.
+):
+    """Production feature core: yields the 8 per-cell feature columns at
+    the flat cells (rows, cols) of (B,s,s,s) cubes, one at a time, in
+    FEATURE_NAMES order. The stencil stages (smoothing, gradient,
+    Hessian) need the full cube; the eigen stage — the most expensive —
+    runs only on the selected cells. Every column is bit-identical to
+    gathering emphysema_features(...) (the dense reference) at the same
+    cells.
 
-    REFERENCE IMPLEMENTATION for batch_feature_vectors' fused loop
-    (which inlines these stages to bin each column without this
-    function's (n_fg, 8) materialization): the fused path is pinned
-    bit-identical to this one by tests/test_kernels.py's fusion parity
-    test — edit both together."""
-    cert = np.asarray(cert)
-    if cert.dtype not in (np.float32, np.float64):
-        cert = cert.astype(np.float64)
+    Columns are yielded rather than stacked so a caller can bin each one
+    the moment it exists and drop it: the saved (n_cells, 8) write+read is
+    pure memory traffic in a DRAM-bandwidth-bound kernel (measured 368 ->
+    460 docs/s single-threaded on the mixed-length distribution).
+    """
     B = img.shape[0]
+
+    def sel(a):
+        return a.reshape(B, -1)[rows, cols]
+
     sm = normalized_convolution(img, cert, sigma)
-    gm = gradient_magnitude(sm)
-    H = hessian6(sm)
-    sel_sm = sm.reshape(B, -1)[rows, cols]
-    sel_gm = gm.reshape(B, -1)[rows, cols]
-    sel_H = H.reshape(B, -1, 6)[rows, cols]
-    ef = eigenvalue_features(sel_H)  # (Nfg, 6)
-    return np.concatenate([np.stack([sel_sm, sel_gm], axis=-1), ef], axis=-1)
+    yield sel(sm)
+    # First derivatives are SHARED between the gradient magnitude and the
+    # Hessian cross terms (hessian6 recomputes dx/dy that
+    # gradient_magnitude already produced — 2 full stencil passes saved),
+    # and the Hessian components are gathered BEFORE stacking (hessian6
+    # materializes a (B,s,s,s,6) array; stacking the gathered columns
+    # writes 6*n_cells instead of 6*B*s^3 doubles). Same expression trees
+    # op for op as gradient_magnitude/hessian6/eigenvalue_features.
+    dx = derivative(sm, 0, 1)
+    dy = derivative(sm, 1, 1)
+    dz = derivative(sm, 2, 1)
+    gm = np.sqrt(dx * dx + dy * dy + dz * dz)
+    yield sel(gm)
+    del gm, dz
+    sel_H = np.stack(
+        [
+            sel(derivative(sm, 0, 2)),   # Dxx
+            sel(derivative(dx, 1, 1)),   # Dxy
+            sel(derivative(dx, 2, 1)),   # Dxz
+            sel(derivative(sm, 1, 2)),   # Dyy
+            sel(derivative(dy, 2, 1)),   # Dyz
+            sel(derivative(sm, 2, 2)),   # Dzz
+        ],
+        axis=-1,
+    )
+    # free the full-cube stencil outputs before the eigen stage (peak RSS)
+    del sm, dx, dy
+    ev = eig3x3(sel_H)
+    del sel_H
+    e0, e1, e2 = ev[..., 0], ev[..., 1], ev[..., 2]
+    yield e0
+    yield e1
+    yield e2
+    yield e0 + e1 + e2
+    yield e0 * e1 * e2
+    yield np.sqrt(e0 * e0 + e1 * e1 + e2 * e2)
 
 
 def emphysema_features(img: np.ndarray, cert: np.ndarray, sigma: float) -> np.ndarray:
@@ -466,7 +497,7 @@ def cube_side(n_tok: int) -> int:
     return max(s, 1)
 
 
-def pad_to_cube(tokens: np.ndarray, side: int | None = None):
+def pad_to_cube(tokens: np.ndarray):
     """Pad a token sequence to s^3 (pad cells get certainty 0 — the
     reference's mask semantics) and C-order reshape to (s,s,s).
 
@@ -474,8 +505,7 @@ def pad_to_cube(tokens: np.ndarray, side: int | None = None):
     """
     tokens = np.asarray(tokens)
     n = len(tokens)
-    s = side if side is not None else cube_side(n)
-    assert s * s * s >= n
+    s = cube_side(n)
     img = np.zeros(s * s * s, dtype=np.float32)
     img[:n] = tokens.astype(np.float32)
     cert = np.zeros(s * s * s, dtype=np.float32)
@@ -537,28 +567,34 @@ def doc_feature_vector(
     return np.concatenate(out)
 
 
-def batch_feature_vectors(
+def batch_feature_counts(
     token_arrays,
     scales=DEFAULT_SCALES,
     edges: np.ndarray | None = None,
-) -> np.ndarray:
-    """Vectorized multi-document feature vectors.
+):
+    """Vectorized multi-document histogram counts.
 
-    Documents are grouped by cube side s; each s-group is processed as ONE
-    (B,s,s,s) batch so every numpy op is vectorized across documents (padding
-    with certainty-0 cells is a no-op for masked outputs — see SURVEY.md
-    §7.1). Returns (n_docs, vec_len) float64 in input order.
+    Documents are grouped by cube side s; each s-group is processed as
+    (B,s,s,s) batches so every numpy op is vectorized across documents
+    (padding with certainty-0 cells is a no-op for masked outputs — see
+    SURVEY.md §7.1). Each feature column from feature_columns is binned
+    the moment it exists.
+
+    Returns (counts, totals): int64 (n_docs, vec_len) counts in the
+    doc_feature_vector layout, and int64 (n_docs,) foreground-cell totals
+    (the histogram denominators), both in input order.
     """
     if edges is None:
         edges = default_edges()
     edges = np.asarray(edges, dtype=np.float64)
     if edges.ndim == 2:
         edges = np.broadcast_to(edges, (len(scales),) + edges.shape)
-    n_edges = edges.shape[-1]
-    vec_len = len(scales) * NUM_FEATURES * (n_edges + 1)
+    nb = edges.shape[-1] + 1
+    vec_len = len(scales) * NUM_FEATURES * nb
 
     n_docs = len(token_arrays)
-    out = np.zeros((n_docs, vec_len), dtype=np.float64)
+    counts = np.zeros((n_docs, vec_len), dtype=np.int64)
+    totals = np.zeros(n_docs, dtype=np.int64)
 
     by_side: dict[int, list[int]] = {}
     for i, toks in enumerate(token_arrays):
@@ -572,7 +608,7 @@ def batch_feature_vectors(
         # otherwise) — the difference between 7.7k and 19k docs/s.
         chunk_b = max(1, CHUNK_CELLS // (s * s * s))
         for c0 in range(0, len(side_idxs), chunk_b):
-            idxs = side_idxs[c0 : c0 + chunk_b]
+            idxs = np.asarray(side_idxs[c0 : c0 + chunk_b])
             B = len(idxs)
             img = np.zeros((B, s * s * s), dtype=np.float32)
             cert = np.zeros((B, s * s * s), dtype=np.float32)
@@ -580,83 +616,36 @@ def batch_feature_vectors(
                 toks = np.asarray(token_arrays[i])
                 img[b, : len(toks)] = toks.astype(np.float32)
                 cert[b, : len(toks)] = 1.0
+            rows, cols = np.nonzero(cert != 0.0)
+            totals[idxs] = np.bincount(rows, minlength=B)
             img = img.reshape(B, s, s, s)
             cert = cert.reshape(B, s, s, s)
-
-            flatc = cert.reshape(B, -1)
-            rows, cols = np.nonzero(flatc != 0.0)
-            # per-doc foreground-cell counts (histogram denominators)
-            totals = np.bincount(rows, minlength=B).astype(np.float64)
-            safe_tot = np.where(totals == 0, 1.0, totals)
-            nb = n_edges + 1
-            idxs_arr = np.asarray(idxs)
-
-            def binit(vals, si, fi):
-                # Vectorized across docs: one searchsorted + bincount per
-                # (scale, feature) for the whole chunk instead of a Python
-                # loop per doc (measured ~30% of kernel time).
-                bins = np.searchsorted(edges[si, fi], vals, side="left")
-                counts = np.bincount(
-                    rows * nb + bins, minlength=B * nb
-                ).reshape(B, nb)
-                off = (si * NUM_FEATURES + fi) * nb
-                out[idxs_arr, off : off + nb] = counts / safe_tot[:, None]
-
             for si, sigma in enumerate(scales):
-                # Histogram binning FUSED into the feature pass: each
-                # feature column is binned the moment it exists and then
-                # dropped, instead of materializing the (n_fg, 8) stack
-                # emphysema_features_fg would build and re-reading it
-                # per feature. Bit-identical (same arithmetic, asserted
-                # when introduced); measured 368 -> 460 docs/s (+25%)
-                # single-threaded on the mixed-length distribution — the
-                # saved (n_fg, 8) write+read is pure memory traffic in a
-                # DRAM-bandwidth-bound kernel. The eigen stage (the hot
-                # spot) still runs on foreground cells only.
-                sm = normalized_convolution(img, cert, sigma)
-                binit(sm.reshape(B, -1)[rows, cols], si, 0)
-                # derivative block with SHARED first-derivative
-                # intermediates (hessian6 recomputes dx/dy that
-                # gradient_magnitude already produced — 2 full stencil
-                # passes saved) and gather-BEFORE-stack for the Hessian
-                # components (hessian6 materializes a (B,s,s,s,6) array
-                # the loop would immediately gather from; stacking the
-                # gathered (n_fg,) columns writes 6*n_fg instead of
-                # 6*cells doubles). Same expression trees op for op —
-                # bit-identical to gradient_magnitude/hessian6, pinned
-                # by the fusion parity test.
-                dx = derivative(sm, 0, 1)
-                dy = derivative(sm, 1, 1)
-                dz = derivative(sm, 2, 1)
-                gm = np.sqrt(dx * dx + dy * dy + dz * dz)
-                binit(gm.reshape(B, -1)[rows, cols], si, 1)
-                del gm, dz
+                cols_iter = feature_columns(img, cert, sigma, rows, cols)
+                for fi, vals in enumerate(cols_iter):
+                    # Vectorized across docs: one searchsorted + bincount
+                    # per (scale, feature) for the whole chunk instead of a
+                    # Python loop per doc (measured ~30% of kernel time).
+                    bins = np.searchsorted(edges[si, fi], vals, side="left")
+                    off = (si * NUM_FEATURES + fi) * nb
+                    counts[idxs, off : off + nb] = np.bincount(
+                        rows * nb + bins, minlength=B * nb
+                    ).reshape(B, nb)
+    return counts, totals
 
-                def sel(a):
-                    return a.reshape(B, -1)[rows, cols]
 
-                sel_H = np.stack(
-                    [
-                        sel(derivative(sm, 0, 2)),   # Dxx
-                        sel(derivative(dx, 1, 1)),   # Dxy
-                        sel(derivative(dx, 2, 1)),   # Dxz
-                        sel(derivative(sm, 1, 2)),   # Dyy
-                        sel(derivative(dy, 2, 1)),   # Dyz
-                        sel(derivative(sm, 2, 2)),   # Dzz
-                    ],
-                    axis=-1,
-                )
-                del sm, dx, dy
-                ev = eig3x3(sel_H)
-                del sel_H
-                e0, e1, e2 = ev[..., 0], ev[..., 1], ev[..., 2]
-                binit(e0, si, 2)
-                binit(e1, si, 3)
-                binit(e2, si, 4)
-                binit(e0 + e1 + e2, si, 5)
-                binit(e0 * e1 * e2, si, 6)
-                binit(np.sqrt(e0 * e0 + e1 * e1 + e2 * e2), si, 7)
-    return out
+def batch_feature_vectors(
+    token_arrays,
+    scales=DEFAULT_SCALES,
+    edges: np.ndarray | None = None,
+) -> np.ndarray:
+    """Vectorized multi-document feature vectors: batch_feature_counts
+    divided by each doc's foreground total (all-zero for an empty doc).
+    Returns (n_docs, vec_len) float64 in input order, equal to
+    doc_feature_vector per doc."""
+    counts, totals = batch_feature_counts(token_arrays, scales, edges)
+    safe = np.where(totals == 0, 1, totals).astype(np.float64)
+    return counts / safe[:, None]
 
 
 def vec_digest(vec) -> str:

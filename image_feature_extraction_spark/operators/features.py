@@ -5,15 +5,16 @@ Spark-first design notes
 The per-sample pipeline (normalized Gaussian convolution -> gradient
 magnitude + Hessian -> eigenvalue features -> masked per-feature histograms,
 SURVEY.md §3.1/§3.3) is row-local: each document depends only on its own
-tokens. The idiomatic Spark shape is therefore ``mapInPandas`` — a narrow
-(zero-shuffle) Arrow-batched transform. This beats the reference's design in
-two ways (SURVEY.md §4 X5/X7): the whole numeric chain is fused into one
-numpy pass per batch (the reference materializes ~15 intermediate volumes),
-and all scales are computed in a single pass over each doc.
+tokens. The idiomatic Spark shape is therefore a narrow (zero-shuffle)
+Arrow-batched transform. This beats the reference's design in two ways
+(SURVEY.md §4 X5/X7): the whole numeric chain is fused into one numpy pass
+per batch (the reference materializes ~15 intermediate volumes), and all
+scales are computed in a single pass over each doc. Every operator here
+turns tokens into feature values through one core, kernels.feature_columns.
 
-``applyInPandas`` grouped variants exist below for the genuinely grouped
-computations (per-source corpus histograms), where a shuffle is semantically
-required; partial aggregation keeps it one shuffle of small maps.
+Per-source corpus histograms are the one genuinely grouped computation: a
+shuffle is semantically required, and map-side partial counts keep it one
+shuffle of small rows.
 
 At 100 TB: mapInPandas preserves input partitioning (parquet split sizing
 via spark.sql.files.maxPartitionBytes governs task granularity); no skew
@@ -38,30 +39,20 @@ def extract_features(
     df: DataFrame,
     scales=K.DEFAULT_SCALES,
     edges: np.ndarray | None = None,
-    tokens_col: str = "tokens",
-    output_col: str = "features",
-    num_partitions: int | None = None,
 ) -> DataFrame:
-    """Append a per-doc feature vector column.
+    """Append a per-doc ``features`` vector column computed from the
+    ``tokens`` column.
 
     Vector layout: scale-major, then feature, then histogram bin
     (reference MakeBag.cxx:459-470). Token arrays pass through unchanged
     (the per-row invariant of BASELINE.json:15).
-
-    num_partitions: repartition (round-robin) before the kernel stage. Set
-    this when the upstream plan ends in a shuffle: AQE coalesces post-
-    shuffle partitions by BYTES, which starves a compute-bound Python stage
-    (bytes are a bad proxy for kernel cost — a 24 MB input can carry 160
-    core-seconds of numpy). On a cluster, size to 2-3x total cores.
     """
     scales_t = tuple(float(s) for s in scales)
     edges_arr = None if edges is None else np.asarray(edges, dtype=np.float64)
-    if num_partitions:
-        df = df.repartition(num_partitions)
     out_schema = StructType(
-        df.schema.fields + [StructField(output_col, ArrayType(DoubleType()), False)]
+        df.schema.fields + [StructField("features", ArrayType(DoubleType()), False)]
     )
-    tok_idx = df.columns.index(tokens_col)
+    tok_idx = df.columns.index("tokens")
 
     # mapInArrow, not mapInPandas: the token column stays a zero-copy Arrow
     # ListArray end to end. The pandas route boxes every row into a python
@@ -87,7 +78,7 @@ def extract_features(
             )
             yield pa.record_batch(
                 list(rb.columns) + [feat_arr],
-                names=list(rb.schema.names) + [output_col],
+                names=list(rb.schema.names) + ["features"],
             )
 
     return df.mapInArrow(fn, out_schema)
@@ -107,7 +98,6 @@ def sample_feature_values(
     doc_fraction: float = 0.1,
     cells_per_doc: int = 64,
     seed: int = 42,
-    tokens_col: str = "tokens",
 ) -> DataFrame:
     """Long-format sample of per-cell feature values: (scale_idx,
     feature_idx, value, salt). Mirrors the reference's random-iterator
@@ -122,7 +112,7 @@ def sample_feature_values(
     would keep whole duplicate-value blocks.
 
     One pandas DataFrame per BATCH (flat numpy accumulation), not one per
-    (doc, scale, feature).
+    (doc, scale, feature). The eigen stage runs on the chosen cells only.
     """
     scales_t = tuple(float(s) for s in scales)
     sampled = df.sample(fraction=doc_fraction, seed=seed) if doc_fraction < 1.0 else df
@@ -132,7 +122,7 @@ def sample_feature_values(
         import hashlib
 
         for pdf in batches:
-            toks_list = [np.asarray(t) for t in pdf[tokens_col]]
+            toks_list = [np.asarray(t) for t in pdf["tokens"]]
             if "doc_id" in pdf:
                 doc_keys = pdf["doc_id"].tolist()
             else:
@@ -152,13 +142,19 @@ def sample_feature_values(
                 take = min(cells_per_doc, len(fg))
                 chosen = rng.choice(fg, size=take, replace=False)
                 salts = (np.int64(dseed & ((1 << 62) - 1)) ^ chosen).astype(np.int64)
+                doc0 = np.zeros(take, dtype=np.intp)
                 for si, sigma in enumerate(scales_t):
-                    feats = K.emphysema_features(img, cert, sigma)
-                    flat = feats.reshape(-1, nf)[chosen]
+                    # One doc per call (B=1), never a batch: the float32
+                    # tensordot in normalized_convolution rounds differently
+                    # for some batch shapes (last-bit differences at cube
+                    # sides 9 and 11). Histogram counts absorb that; sampled
+                    # values are output, so they must equal the single-doc
+                    # dense path bit for bit.
+                    cols = K.feature_columns(img[None], cert[None], sigma, doc0, chosen)
                     # feature-major flatten: rows for fi=0 first, etc.
                     si_a.append(np.full(take * nf, si, dtype=np.int32))
                     fi_a.append(np.repeat(np.arange(nf, dtype=np.int32), take))
-                    val_a.append(np.asarray(flat.T.reshape(-1), dtype=np.float64))
+                    val_a.append(np.concatenate(list(cols)))
                     salt_a.append(np.tile(salts, nf))
             if si_a:
                 yield pd.DataFrame(
@@ -214,7 +210,7 @@ def compute_equalized_edges(
 
 
 # ---------------------------------------------------------------------------
-# Grouped corpus histograms (applyInPandas — shuffle is semantically needed)
+# Grouped corpus histograms (the shuffle is semantically needed)
 # ---------------------------------------------------------------------------
 
 def per_source_histograms(
@@ -236,11 +232,7 @@ def per_source_histograms(
     bins regardless of corpus size — are reassembled into bin-ordered
     arrays with a final tiny aggregation.
     """
-    if edges is None:
-        edges = K.default_edges()
-    edges = np.asarray(edges, dtype=np.float64)
-    if edges.ndim == 2:
-        edges = np.broadcast_to(edges, (len(scales),) + edges.shape).copy()
+    edges = K.default_edges() if edges is None else np.asarray(edges, dtype=np.float64)
     scales_t = tuple(float(s) for s in scales)
     n_bins = edges.shape[-1] + 1
 
@@ -248,28 +240,27 @@ def per_source_histograms(
 
     def partial(batches):
         for pdf in batches:
-            acc: dict[tuple, np.ndarray] = {}
-            for src, toks in zip(pdf["source"], pdf["tokens"]):
-                toks = np.asarray(toks)
-                img, cert = K.pad_to_cube(toks)
-                fg = cert.reshape(-1) != 0
-                for si, sigma in enumerate(scales_t):
-                    feats = K.emphysema_features(img, cert, sigma)
-                    flat = feats.reshape(-1, K.NUM_FEATURES)[fg]
-                    for fi in range(K.NUM_FEATURES):
-                        key = (src, si, fi)
-                        c = K.histogram_counts(flat[:, fi], edges[si, fi])
-                        if key in acc:
-                            acc[key] += c
-                        else:
-                            acc[key] = c
-            if acc:
-                yield pd.DataFrame(
-                    [
-                        {"source": k[0], "scale_idx": k[1], "feature_idx": k[2], "counts": v}
-                        for k, v in acc.items()
-                    ]
-                )
+            if len(pdf) == 0:
+                continue
+            counts, _ = K.batch_feature_counts(
+                [np.asarray(t) for t in pdf["tokens"]], scales_t, edges
+            )
+            by_src = (
+                pd.DataFrame(counts)
+                .groupby(pdf["source"].to_numpy(), dropna=False, sort=False)
+                .sum()
+            )
+            per_key = by_src.to_numpy().reshape(
+                len(by_src), len(scales_t), K.NUM_FEATURES, n_bins
+            )
+            yield pd.DataFrame(
+                [
+                    {"source": src, "scale_idx": si, "feature_idx": fi, "counts": c}
+                    for src, per_scale in zip(by_src.index, per_key)
+                    for si, per_feature in enumerate(per_scale)
+                    for fi, c in enumerate(per_feature)
+                ]
+            )
 
     partials = df.mapInPandas(partial, partial_schema)
     # posexplode -> SUM per (key, bin): partial aggregation runs map-side,

@@ -767,9 +767,9 @@ def q_flagship_features(spark, sf_dir):
 def _flagship_features_sql() -> str:
     """VALUES-literal oracle (q_checkpoint_ledger pattern): expected rows
     computed from the INDEPENDENT per-doc numpy oracle — K.doc_feature_vector,
-    the unfused single-document reference path that the fused batch kernel
-    (K.batch_feature_vectors, used by the Spark query) is separately tested
-    bit-identical to — over the same deterministic synth model. Mirrors the
+    the dense single-document reference path (it never calls the production
+    feature core K.feature_columns that the Spark query runs; tests pin the
+    two bit-identical) — over the same deterministic synth model. Mirrors the
     reference's golden-literal contract surface (tools/MakeBag.cxx:473-490
     scalar bag rows, test/Symmetric3x3EigenvalueSolverTest.cxx:48-90)."""
     import numpy as np
@@ -838,10 +838,11 @@ def _equalized_edges_sql() -> str:
     """VALUES-literal oracle: the whole two-phase sampling + equi-depth
     flow recomputed WITHOUT Spark — per-doc foreground cells, the
     deterministic md5 cell-choice rng (seed spec of
-    features.sample_feature_values), kernel values, then exact
-    duplicate-aware edges over the sorted multiset. The distributed path's
-    row-cap window never drops rows at this size (4096 << sample_cap), so
-    the multisets are identical and the edges bit-equal."""
+    features.sample_feature_values), dense K.emphysema_features values,
+    then exact duplicate-aware edges over the sorted multiset. The
+    distributed path's row-cap window never drops rows at this size
+    (4096 << sample_cap), so the multisets are identical and the edges
+    bit-equal."""
     import hashlib
 
     import numpy as np

@@ -4,6 +4,8 @@ Asserts (FIXTURES.md §4): numpy.allclose on feature vectors per doc_id,
 exact token-array passthrough, invariance to input partition count.
 """
 
+import hashlib
+
 import numpy as np
 import pytest
 
@@ -90,10 +92,40 @@ def test_two_phase_equalized_edges_flow(spark, token_df):
         np.testing.assert_allclose(np.array(row["features"]), want, rtol=1e-9)
 
 
+def test_sampled_values_match_dense_kernel(spark, token_df):
+    # every sampled value equals the dense per-doc kernel at the same
+    # md5-seeded chosen cell, bit for bit, at both scales
+    seed, cells = 42, 64
+    got = sorted(
+        (r["scale_idx"], r["feature_idx"], r["salt"], r["value"])
+        for r in sample_feature_values(
+            token_df, scales=SCALES, doc_fraction=1.0, cells_per_doc=cells, seed=seed
+        ).collect()
+    )
+    want = []
+    for row in synth.token_table_pandas(N_DOCS).itertuples():
+        img, cert = K.pad_to_cube(np.asarray(row.tokens))
+        fg = np.flatnonzero(cert.reshape(-1))
+        dseed = int.from_bytes(
+            hashlib.md5(f"cells:{seed}:{row.doc_id}".encode()).digest()[:8], "little"
+        )
+        rng = np.random.Generator(np.random.PCG64(dseed))
+        chosen = rng.choice(fg, size=min(cells, len(fg)), replace=False)
+        salts = np.int64(dseed & ((1 << 62) - 1)) ^ chosen
+        for si, sigma in enumerate(SCALES):
+            flat = K.emphysema_features(img, cert, sigma).reshape(-1, K.NUM_FEATURES)
+            for fi in range(K.NUM_FEATURES):
+                want += [
+                    (si, fi, int(salt), float(v))
+                    for salt, v in zip(salts, flat[chosen, fi])
+                ]
+    assert got == sorted(want)
+
+
 def test_per_source_histograms_match_oracle(spark, token_df):
     got = {
         (r["source"], r["scale_idx"], r["feature_idx"]): np.array(r["counts"])
-        for r in per_source_histograms(token_df, scales=(1.0,)).collect()
+        for r in per_source_histograms(token_df, scales=SCALES).collect()
     }
     # local oracle
     edges = K.default_edges()
@@ -102,12 +134,13 @@ def test_per_source_histograms_match_oracle(spark, token_df):
     for row in pdf.itertuples():
         img, cert = K.pad_to_cube(np.asarray(row.tokens))
         fg = cert.reshape(-1) != 0
-        feats = K.emphysema_features(img, cert, 1.0)
-        flat = feats.reshape(-1, K.NUM_FEATURES)[fg]
-        for fi in range(K.NUM_FEATURES):
-            key = (row.source, 0, fi)
-            c = K.histogram_counts(flat[:, fi], edges[fi])
-            want[key] = want.get(key, 0) + c
+        for si, sigma in enumerate(SCALES):
+            feats = K.emphysema_features(img, cert, sigma)
+            flat = feats.reshape(-1, K.NUM_FEATURES)[fg]
+            for fi in range(K.NUM_FEATURES):
+                key = (row.source, si, fi)
+                c = K.histogram_counts(flat[:, fi], edges[fi])
+                want[key] = want.get(key, 0) + c
     assert got.keys() == want.keys()
     for k in got:
         np.testing.assert_array_equal(got[k], want[k])
