@@ -284,3 +284,33 @@ def test_feature_vector_deterministic():
     v2 = K.doc_feature_vector(toks.copy())
     np.testing.assert_array_equal(v1, v2)
     assert len(v1) == len(K.DEFAULT_SCALES) * K.NUM_FEATURES * 5
+
+
+def test_fused_binning_matches_unfused_reference():
+    """batch_feature_vectors' bin-as-you-go loop == histogramming the
+    (n_fg, 8) matrix stacked from feature_columns one doc at a time, bit
+    for bit."""
+    rng = np.random.default_rng(123)
+    docs = [rng.integers(0, 50257, int(L)) for L in rng.integers(16, 2048, 60)]
+    edges = K.default_edges()
+    n_edges = edges.shape[-1]
+    scales = K.DEFAULT_SCALES
+    got = K.batch_feature_vectors(docs, scales=scales)
+    nb = n_edges + 1
+    want = np.zeros_like(got)
+    for i, toks in enumerate(docs):
+        img, cert = K.pad_to_cube(np.asarray(toks))
+        img = img[None].astype(np.float32)
+        cert = cert[None].astype(np.float32)
+        rows, cols = np.nonzero(cert.reshape(1, -1) != 0.0)
+        total = max(len(rows), 1)
+        for si, sigma in enumerate(scales):
+            fg = np.stack(
+                list(K.feature_columns(img, cert, sigma, rows, cols)), axis=1
+            )
+            for fi in range(K.NUM_FEATURES):
+                bins = np.searchsorted(edges[fi], fg[:, fi], side="left")
+                counts = np.bincount(bins, minlength=nb)[:nb]
+                off = (si * K.NUM_FEATURES + fi) * nb
+                want[i, off:off + nb] = counts / total
+    np.testing.assert_array_equal(got, want)
