@@ -52,9 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _as_list(x):
-    return [x] if isinstance(x, str) else list(x)
+from .windows import _as_list, _epoch
 
 
 def _dt_naive(series):
@@ -300,18 +298,6 @@ def _resolve_output_cols(
     return rcols, out_rnames, right_on_out
 
 
-def _ts_double(df: DataFrame, on: str):
-    """Any orderable time column -> double (epoch seconds for timestamps).
-    TIMESTAMP_NTZ has no direct double cast in Spark 4; route via timestamp
-    (session timezone is pinned to UTC in session.py, so this is stable)."""
-    from pyspark.sql.types import TimestampNTZType
-
-    c = F.col(on)
-    if isinstance(df.schema[on].dataType, TimestampNTZType):
-        c = c.cast("timestamp")
-    return c.cast("double")
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -370,7 +356,7 @@ def asof_join(
             " (a negative width inverts bucket order vs time and silently"
             " loses cross-bucket matches)"
         )
-    lf = left.withColumn("_ts_d", _ts_double(left, on)).withColumn(
+    lf = left.withColumn("_ts_d", _epoch(left, on)).withColumn(
         "_b", F.floor(F.col("_ts_d") / F.lit(W)).cast("long")
     )
     # Rename right-side columns up front so self-lineage (left and right
@@ -378,7 +364,7 @@ def asof_join(
     P = "_r_"
     right2 = right.select(
         *[F.col(c).alias(P + c) for c in by_l],
-        _ts_double(right, on).alias("_ts_d"),
+        _epoch(right, on).alias("_ts_d"),
         F.col(on).alias(P + on),
         *[F.col(c).alias(P + c) for c in rcols],
     )

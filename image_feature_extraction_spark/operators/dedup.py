@@ -53,23 +53,6 @@ def md5_long(col):
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def content_hash(col, hash_fn: str = "md5"):
-    """Non-negative 32-bit content hash of a string column.
-
-    "md5" is the ORACLE-PARITY path (DuckDB reproduces it bit-for-bit);
-    "xxhash64" is whole-stage-codegen native (no hex round-trip) with the
-    same distributional properties but no SQL mirror. Measured at sf0.1
-    the two are within noise — shingle CONSTRUCTION dominates, not
-    hashing (see widen_small_scan) — so xxhash64 is an option for
-    pipelines where hashing itself dominates (very long documents), not
-    a default. Both land in [0, 2^32)."""
-    if hash_fn == "md5":
-        return md5_long(col)
-    if hash_fn == "xxhash64":
-        return F.pmod(F.xxhash64(col), F.lit(1 << 32)).cast("long")
-    raise ValueError(f"unknown hash_fn {hash_fn!r}")
-
-
 def words_of(text_col):
     """Whitespace tokenization, trim first (matches DuckDB
     regexp_split_to_array(trim(x), '\\s+')).
@@ -132,8 +115,7 @@ def hot_shingles(sh: DataFrame, max_doc_freq: int) -> DataFrame:
 def minhash_signatures(df: DataFrame, text_col: str = "text", n: int = 3,
                        num_hashes: int = 8,
                        max_doc_freq: int | None = None,
-                       hot: DataFrame | None = None,
-                       hash_fn: str = "md5") -> DataFrame:
+                       hot: DataFrame | None = None) -> DataFrame:
     """Per-doc MinHash signature: h_j = min over shingles of
     (a_j * (H(shingle) mod p) + b_j) mod p. Docs with fewer than one
     shingle are dropped (no signature). Output: doc_id, h0..h{k-1}.
@@ -148,9 +130,6 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", n: int = 3,
     docs). The cap costs one extra pass over the shingle stream (the DF
     count); in a production pipeline compute `hot_shingles` ONCE and
     pass it via `hot=` to amortize it across every capped operator.
-
-    hash_fn: "md5" (DuckDB-oracle parity, default) or "xxhash64" (the
-    codegen-native production path — see content_hash).
     """
     assert num_hashes <= len(MINHASH_COEFFS)
     sh = shingles(df, text_col, n)
@@ -158,7 +137,7 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", n: int = 3,
         hot = hot_shingles(sh, max_doc_freq)
     if hot is not None:
         sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    hmod = (content_hash(F.col("shingle"), hash_fn) % MINHASH_PRIME).alias("hm")
+    hmod = (md5_long(F.col("shingle")) % MINHASH_PRIME).alias("hm")
     sh = sh.select("doc_id", hmod)
     aggs = [
         F.min((F.lit(a) * F.col("hm") + F.lit(b)) % MINHASH_PRIME).alias(f"h{j}")

@@ -48,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .windows import _as_list
+from .windows import _as_list, _epoch
 
 # Bayesian smoothing defaults for target_encode, shared with the oracle
 # SQL generators so the two sides cannot drift.
@@ -63,16 +63,6 @@ def cents_sql(col: str) -> str:
     Spark and DuckDB). Shared by decayed_features, its oracle, and
     monitor.backtest_folds."""
     return f"CAST(CAST({col} AS DECIMAL(18,2)) * 100 AS BIGINT)"
-
-
-def _epoch(df: DataFrame, ts: str):
-    """Timestamp column as epoch-seconds double (TimestampNTZ normalized)."""
-    from pyspark.sql.types import TimestampNTZType
-
-    tcol = F.col(ts)
-    if isinstance(df.schema[ts].dataType, TimestampNTZType):
-        tcol = tcol.cast("timestamp")
-    return tcol.cast("double")
 
 
 def expanding_zscore(

@@ -24,9 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _as_list(x):
-    return [x] if isinstance(x, str) else list(x)
+from .windows import _as_list
 
 
 def exact_quantile_values(

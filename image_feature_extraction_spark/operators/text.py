@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import content_hash, words_of
+from .dedup import md5_long, words_of
 
 # Marker stopwords per language for the n-gram/stopword-hit language-ID
 # heuristic. Deterministic tie-break: highest hits, then language asc;
@@ -106,18 +106,14 @@ def langid(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("_w", words_of(F.col(text_col))).select(*sel)
 
 
-def fingerprint(df: DataFrame, text_col: str = "text", n: int = 3,
-                hash_fn: str = "md5") -> DataFrame:
+def fingerprint(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     """Document fingerprint from word n-gram hashes (winnowing-lite):
     min-hash, max-hash, xor-reduced hash, and distinct-shingle count —
-    a compact content signature robust to local edits at the ends.
-
-    hash_fn: "md5" (DuckDB-oracle parity, default) or "xxhash64" (the
-    codegen-native production path, no hex round-trip)."""
+    a compact content signature robust to local edits at the ends."""
     from .dedup import shingles
 
     sh = shingles(df, text_col, n)
-    h = sh.select("doc_id", content_hash(F.col("shingle"), hash_fn).alias("h"))
+    h = sh.select("doc_id", md5_long(F.col("shingle")).alias("h"))
     # xor-reduction via sum of bit parities is order-independent; DuckDB
     # mirrors with bit_xor aggregate. Spark has no bit_xor agg function on
     # all versions — emulate order-independently: xor == parity per bit.

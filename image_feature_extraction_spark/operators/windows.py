@@ -35,6 +35,18 @@ def _as_list(x):
     return [x] if isinstance(x, str) else list(x)
 
 
+def _epoch(df: DataFrame, ts: str):
+    """Any orderable time column -> double (epoch seconds for timestamps).
+    TIMESTAMP_NTZ has no direct double cast in Spark 4; route via timestamp
+    (session timezone is pinned to UTC in session.py, so this is stable)."""
+    from pyspark.sql.types import TimestampNTZType
+
+    c = F.col(ts)
+    if isinstance(df.schema[ts].dataType, TimestampNTZType):
+        c = c.cast("timestamp")
+    return c.cast("double")
+
+
 def lag_lead(
     df: DataFrame,
     by,
@@ -119,12 +131,7 @@ def nearest_event_distance(
     Null when the entity has no marker rows. One shuffle, two sorts
     (same partitioning, opposite frame directions).
     """
-    from pyspark.sql.types import TimestampNTZType
-
-    tcol = F.col(ts)
-    if isinstance(df.schema[ts].dataType, TimestampNTZType):
-        tcol = tcol.cast("timestamp")
-    td = tcol.cast("double")
+    td = _epoch(df, ts)
     mts = F.when(marker, td)
     # RANGE frames over the numeric time value, not ROWS over sort order:
     # at duplicate timestamps a ROWS frame makes the answer depend on the
@@ -170,12 +177,7 @@ def moving_aggregate(
     the relational analog of Gaussian smoothing along the time axis
     (SmoothingRecursiveGaussian usage, SURVEY.md §2.3 N3), causal so
     leakage-free. Sum is computed on DECIMAL for cross-engine exactness."""
-    from pyspark.sql.types import TimestampNTZType
-
-    tcol = F.col(ts)
-    if isinstance(df.schema[ts].dataType, TimestampNTZType):
-        tcol = tcol.cast("timestamp")
-    d = df.withColumn("_epoch", tcol.cast("double"))
+    d = df.withColumn("_epoch", _epoch(df, ts))
     # Python's Window.rangeBetween only accepts int boundaries; a fractional
     # width over a double ordering needs the SQL frame syntax.
     by_sql = ", ".join(_as_list(by))
@@ -214,20 +216,14 @@ def session_stats(
 ) -> DataFrame:
     """Sessionize then aggregate one row per (entity, session): event count,
     start/end, duration. `agg_cols` maps output name -> Column for extras."""
-    from pyspark.sql.types import TimestampNTZType
-
     by_l = _as_list(by)
     s = sessionize(df, by, ts, gap)
-    tcol = F.col(ts)
-    if isinstance(df.schema[ts].dataType, TimestampNTZType):
-        tcol = tcol.cast("timestamp")
+    td = _epoch(df, ts)
     aggs = [
         F.count(F.lit(1)).alias("n_events"),
         F.min(ts).alias("session_start"),
         F.max(ts).alias("session_end"),
-        (F.max(tcol.cast("double")) - F.min(tcol.cast("double"))).alias(
-            "duration_sec"
-        ),
+        (F.max(td) - F.min(td)).alias("duration_sec"),
     ]
     for name, col in (agg_cols or {}).items():
         aggs.append(col.alias(name))
@@ -260,14 +256,9 @@ def gaussian_time_smooth(
     occupancy, never the entity's history; shuffles are keyed by
     (entity, bucket), so a hot entity spreads across buckets.
     """
-    from pyspark.sql.types import TimestampNTZType
-
     by_l = _as_list(by)
     B = float(cutoff) * float(sigma)
-    tcol = F.col(ts)
-    if isinstance(df.schema[ts].dataType, TimestampNTZType):
-        tcol = tcol.cast("timestamp")
-    base = df.withColumn("_t", tcol.cast("double"))
+    base = df.withColumn("_t", _epoch(df, ts))
     # unique probe-row id: keeps duplicate input rows distinct through the
     # join+aggregate (grouping on data columns would merge them)
     probe0 = base.withColumn("_rid", F.monotonically_increasing_id())

@@ -1,8 +1,10 @@
-"""Structured Streaming operators: watermarked windowed aggregation,
-session windows, and a custom stateful running aggregate.
+"""Structured Streaming operators: the stream forms of the batch engine's
+windowed aggregates, dedup, as-of enrichment, drift monitor and encoders.
 
-The reference is strictly batch (SURVEY.md §2.9) — these are the engine's
-forward-looking stream re-expressions of the same semantics:
+The reference is strictly batch (SURVEY.md §2.9); these re-express the
+same semantics over micro-batches, and batch/stream parity is the
+correctness gate (availableNow over a static file set must equal the
+batch computation on the same files; tested).
 
 - ``windowed_counts``: tumbling event-time windows + watermark = the
   histogram-per-time-bucket of the batch engine with bounded state and
@@ -10,22 +12,45 @@ forward-looking stream re-expressions of the same semantics:
 - ``session_aggregate``: native session_window (gap rule) = the batch
   ``operators.windows.sessionize`` (ROI-boundary rule,
   RegionOfInterestGenerator.hxx:43-56) with state expiry via watermark.
-- ``running_user_stats``: applyInPandasWithState — per-entity running
-  count/sum surviving across micro-batches; the streaming form of the
+- ``running_user_stats``: per-entity running count/sum surviving across
+  micro-batches (applyInPandasWithState); the streaming form of the
   per-partition ledger metrics.
+- ``dedup_exact``: first arrival of each content hash.
+- ``streaming_asof_enrich``: point-in-time enrichment against a static
+  feature table (the batch broadcast as-of, run per micro-batch).
+- ``streaming_drift``: windowed drift against a static reference
+  histogram (the batch monitor's expressions).
+- The encoder twins ``streaming_zscore``, ``streaming_decayed``,
+  ``streaming_frequency_encode`` and ``streaming_target_encode`` mirror
+  ``operators.encode``'s ``expanding_zscore``, ``decayed_features``,
+  ``frequency_encode`` and ``target_encode`` bit for bit. Each is a state
+  layout, an initial state and one ``step`` over the shared stateful
+  driver ``_peer_scan``.
 
-Batch/stream parity is the correctness gate: availableNow over a static
-file set must equal the batch computation on the same files (tested).
+Arrival contract of the encoder twins, enforced once in ``_peer_scan``:
+rows arrive per key in time order across micro-batches (the
+daily-increment shape, SCALE.md). Within a micro-batch, rows sharing a
+timestamp score against the same earlier state and never each other (the
+batch peer-exclusion rule); NULL-ts rows get NULL features and add
+nothing. In the two bucketed twins a row whose bucket precedes the open
+bucket is late: it gets NULL features and adds nothing, instead of
+reading future buckets and booking its value under the newest one. Late
+data beyond the contract is a reprocess, not a state patch. Values carry
+at most 2 decimals (the batch DECIMAL(18,2) contract); state holds them
+as integer cents.
 
 Scale notes: state is keyed by (window x key) / (session x key) and
-bounded by the watermark horizon; shuffle partitioning of the stateful
-operators follows spark.sql.shuffle.partitions. At 10^12-row history the
-stream handles the increment while the batch engine owns the backfill —
-both produce identical rows by construction (same expressions).
+bounded by the watermark horizon, or by a fixed number of longs per key
+for the encoder twins; shuffle partitioning of the stateful operators
+follows spark.sql.shuffle.partitions. At 10^12-row history the stream
+handles the increment while the batch engine owns the backfill.
 """
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -202,6 +227,13 @@ def dedup_exact(
     return out
 
 
+# The open bucket before a key's first row: buckets are floor(epoch/width)
+# with width >= 1 s, so |bucket| < 2^40 for any representable timestamp and
+# -2^62 is unreachable by real data (a plain -1 would collide with pre-1970
+# epochs). Opening the first real bucket from it folds zero partials.
+NO_BUCKET = -(1 << 62)
+
+
 def _cents_half_up(vals):
     """Integer cents of a float64 array, mirroring the batch operators'
     ``CAST(x AS DECIMAL(18,2)) * 100`` bit-for-bit.
@@ -229,8 +261,6 @@ def _cents_half_up(vals):
     slow path. Callers pass finite values only: the batch cast turns
     NaN/NULL and ±Inf into NULL, and floor(±Inf) -> undefined int64.
     """
-    import numpy as np
-
     p = np.abs(vals) * 100.0
     fast = np.floor(p + 0.5)
     near = np.abs(p - np.floor(p) - 0.5) <= np.minimum(1e-6 + 1e-12 * p, 0.499)
@@ -246,6 +276,107 @@ def _cents_half_up(vals):
     return (np.sign(vals) * fast).astype(np.int64)
 
 
+def _cents_and_count(vals):
+    """What one group of values adds to history, as the batch operators
+    count it: integer cents of the finite values (the DECIMAL(18,2) cast
+    turns ±Inf into NULL, and a non-finite cent would be int64 garbage)
+    and the COUNT(value), which skips NULLs but counts ±Inf."""
+    v = np.asarray(vals, dtype=np.float64)
+    return _cents_half_up(v[np.isfinite(v)]), int((~np.isnan(v)).sum())
+
+
+def _peer_scan(
+    events: DataFrame,
+    by,
+    ts: str,
+    id_col: str,
+    features: str,
+    state_schema: str,
+    init: tuple,
+    step,
+    bucket_seconds: float | None = None,
+    bucket_col: str | None = None,
+) -> DataFrame:
+    """The stateful driver of the encoder twins: applyInPandasWithState
+    over ``groupBy(by)`` in update mode, enforcing the module's arrival
+    contract.
+
+    Per key and micro-batch the arrived rows are sorted stably by
+    (ts, id_col) and walked in peer groups of equal ts. Each group calls
+    ``step(state, group, bucket) -> (features, state)`` with the state
+    from before the group; ``features`` maps each output feature to a
+    group constant or a per-row array. NULL-ts rows never reach ``step``.
+
+    With ``bucket_seconds``, ``bucket`` is floor(epoch / bucket_seconds),
+    the batch operators' arithmetic, and is written to ``bucket_col`` when
+    one is named; without it, ``bucket`` is None. A bucketed ``step``
+    returns None for a late group: its rows get NULL features, keep their
+    bucket, and the state is unchanged.
+
+    ``features`` is a DDL list of long/double columns. Output rows are
+    (id_col, *by, [bucket_col], *features); long columns are nullable.
+    The state starts at ``init`` and is stored in ``state_schema``'s
+    layout once per micro-batch.
+    """
+    from pyspark.sql.streaming.state import GroupStateTimeout
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    from ..operators.asof import _ts_np_series
+    from ..operators.windows import _as_list
+
+    by_l = _as_list(by)
+    kinds = {"long": LongType(), "double": DoubleType()}
+    feats = [f.split() for f in features.split(",")]
+    tail = [(bucket_col, "long")] if bucket_col else []
+    out_schema = StructType(
+        [StructField(c, events.schema[c].dataType) for c in [id_col, *by_l]]
+        + [StructField(c, kinds[t]) for c, t in tail + feats]
+    )
+
+    def fn(key_, pdf_iter, state):
+        import pandas as pd
+
+        st = state.get if state.exists else init
+        pdf = pd.concat(list(pdf_iter), ignore_index=True)
+        pdf = pdf.sort_values([ts, id_col], kind="stable").reset_index(drop=True)
+        k = len(pdf)
+        out = {c: np.full(k, None, dtype=object) for c, _ in tail + feats}
+        if bucket_seconds is not None:
+            bks = np.floor(_ts_np_series(pdf[ts]) / float(bucket_seconds))
+        for t, grp in pdf.groupby(ts, sort=True, dropna=False):
+            if pd.isna(t):
+                continue
+            gi = grp.index.to_numpy()
+            b = None if bucket_seconds is None else int(bks[gi[0]])
+            if bucket_col:
+                out[bucket_col][gi] = b
+            r = step(st, grp, b)
+            if r is None:
+                continue
+            vals, st = r
+            for c, _ in feats:
+                out[c][gi] = vals[c]
+        state.update(st)
+        yield pd.DataFrame(
+            {
+                id_col: pdf[id_col].to_numpy(),
+                **{c: [key_[i]] * k for i, c in enumerate(by_l)},
+                **{
+                    c: pd.array(out[c], dtype="Int64") if t == "long" else out[c]
+                    for c, t in tail + feats
+                },
+            }
+        )
+
+    return events.groupBy(*by_l).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
 ZSCORE_STATE_SCHEMA = "n long, s_cents long, ss_cents4 long"
 
 
@@ -257,117 +388,38 @@ def streaming_zscore(
     id_col: str = "event_id",
 ) -> DataFrame:
     """Streaming counterpart of ``operators.encode.expanding_zscore``:
-    per-entity expanding z-score against strictly-earlier history, scored
-    as events arrive (applyInPandasWithState, update mode).
+    per-entity expanding z-score against strictly-earlier history.
 
-    Bit-exact parity contract with the batch operator: state carries the
-    history as INTEGER cents (sum) and 10^-4 units (sum of squares) —
-    the streaming mirror of the batch DECIMAL(38,2)/(38,4) sums, immune
-    to accumulation order — and the float post-processing reproduces the
-    batch expression tree op for op (cents/100 and n are exact, every
+    State carries the history as INTEGER cents (sum) and 10^-4 units (sum
+    of squares), the mirror of the batch DECIMAL(38,2)/(38,4) sums and
+    immune to accumulation order, and the float post-processing replays
+    the batch expression tree op for op (cents/100 and n are exact, every
     (/, *, -, sqrt) is correctly rounded IEEE, so identical inputs give
-    identical bits). Values must carry at most 2 decimals (same contract
-    the batch decimals enforce); int64 cents bound the history at ~9e16
-    value-units per entity.
-
-    Within a micro-batch, rows are processed in (ts, id_col) order and
-    rows sharing a timestamp are scored against the SAME pre-group state
-    (the batch operator's peer-exclusion rule). Parity across batches
-    requires per-entity time-ordered arrival (the daily-increment shape,
-    SCALE.md); late data beyond that is a reprocess, not a state patch.
+    identical bits). int64 cents bound the history at ~9e16 value-units
+    per entity.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
-    out_schema = StructType(
-        [
-            StructField(id_col, events.schema[id_col].dataType),
-            StructField(key, events.schema[key].dataType),
-            StructField("z_n_prev", LongType()),
-            StructField("z_mean_prev", DoubleType()),
-            StructField("z_var_prev", DoubleType()),
-            StructField("z_score", DoubleType()),
-        ]
-    )
+    def step(st, grp, _):
+        n, s_c, ss_c = st
+        mean = var = score = None
+        if n >= 1:
+            mean = (float(s_c) / 100.0) / float(n)
+        if n >= 2:
+            var = (float(ss_c) / 10000.0) / float(n) - mean * mean
+        if var is not None and var > 0:
+            sc = (grp[value].to_numpy(np.float64) - mean) / math.sqrt(var)
+            # NULL values score NULL (the batch NULL arithmetic), not NaN
+            score = np.where(np.isnan(sc), None, sc)
+        vc, k = _cents_and_count(grp[value])
+        return (
+            {"z_n_prev": n, "z_mean_prev": mean, "z_var_prev": var, "z_score": score},
+            (n + k, s_c + int(vc.sum()), ss_c + int((vc * vc).sum())),
+        )
 
-    def fn(key_, pdf_iter, state):
-        import math
-
-        import numpy as np
-        import pandas as pd
-
-        n, s_c, ss_c = state.get if state.exists else (0, 0, 0)
-        pdf = pd.concat(list(pdf_iter), ignore_index=True)
-        pdf = pdf.sort_values([ts, id_col], kind="stable").reset_index(drop=True)
-        tnull = pdf[ts].isna().to_numpy()
-        frames = []
-        for _, grp in pdf.groupby(ts, sort=True, dropna=False):
-            k = len(grp)
-            if tnull[grp.index[0]]:
-                # NULL-ts rows: NULL features, no history contribution
-                # (the batch operator's family rule)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            id_col: grp[id_col].to_numpy(),
-                            key: [key_[0]] * k,
-                            "z_n_prev": pd.array([None] * k, dtype="Int64"),
-                            "z_mean_prev": [None] * k,
-                            "z_var_prev": [None] * k,
-                            "z_score": [None] * k,
-                        }
-                    )
-                )
-                continue
-            # Whole same-ts group scores against the pre-group state, so
-            # mean/var are group constants and the scores vectorize.
-            mean = var = None
-            if n >= 1:
-                mean = (float(s_c) / 100.0) / float(n)
-            if n >= 2:
-                var = (float(ss_c) / 10000.0) / float(n) - mean * mean
-            if var is not None and var > 0:
-                sc = (grp[value].to_numpy(np.float64) - mean) / math.sqrt(var)
-                # NULL values score NULL (the batch operator's NULL
-                # arithmetic), not NaN-on-the-wire
-                sc = pd.Series(sc, dtype="object").where(~np.isnan(sc.astype(np.float64)), None)
-            else:
-                sc = pd.Series([None] * k, dtype="object")
-            frames.append(
-                pd.DataFrame(
-                    {
-                        id_col: grp[id_col].to_numpy(),
-                        key: [key_[0]] * k,
-                        "z_n_prev": np.full(k, n, dtype=np.int64),
-                        "z_mean_prev": [mean] * k,
-                        "z_var_prev": [var] * k,
-                        "z_score": sc,
-                    }
-                )
-            )
-            # The batch operator's COUNT(value) skips NULLs but counts
-            # ±Inf, while its DECIMAL(18,2) cast turns ±Inf into NULL, so
-            # the sums skip both. Mask before rounding: a non-finite cent
-            # is undefined int64 garbage that would corrupt the state.
-            vals = grp[value].to_numpy(np.float64)
-            vc = _cents_half_up(vals[np.isfinite(vals)])
-            n += int((~np.isnan(vals)).sum())
-            s_c += int(vc.sum())
-            ss_c += int((vc * vc).sum())
-        state.update((n, s_c, ss_c))
-        yield pd.concat(frames, ignore_index=True)
-
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=ZSCORE_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _peer_scan(
+        events, key, ts, id_col,
+        "z_n_prev long, z_mean_prev double, z_var_prev double, z_score double",
+        ZSCORE_STATE_SCHEMA, (0, 0, 0), step,
     )
 
 
@@ -428,132 +480,44 @@ def streaming_decayed(
 ) -> DataFrame:
     """Streaming counterpart of ``operators.encode.decayed_features``:
     per-entity exponentially time-decayed sum/count of strictly-earlier
-    events, scored as events arrive (applyInPandasWithState, update mode)
-    — the real-time serving form of the feature-store recency counter.
+    events, the real-time serving form of the feature-store recency
+    counter.
 
-    State is a ring of the last `horizon` buckets' (cents, count)
-    partials per entity — O(horizon) longs regardless of history length.
-    Because the batch operator's weights are dyadic (2^-k), every term
-    and partial sum here is exactly representable, so the stream
-    reproduces the batch output BIT-FOR-BIT under the same arrival
-    contract as streaming_zscore: per-entity time-ordered micro-batches
-    (the daily-increment shape); rows sharing a timestamp score against
-    the same pre-group state and never each other. Values must carry at
-    most 2 decimals (the batch DECIMAL(18,2) contract). The bucket-order
-    contract is ENFORCED across micro-batches: an event whose bucket
-    precedes the open bucket gets NULL features and contributes nothing
-    to the ring (it would otherwise read future buckets and book its
-    value under the newest one) — same rule as streaming_target_encode.
+    State is the open bucket and a ring of the last `horizon` buckets'
+    (cents, count) partials: O(horizon) longs regardless of history
+    length. The batch weights are dyadic (2^-k), so every term and
+    partial sum is exactly representable and the stream reproduces the
+    batch output bit for bit.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     from ..operators.encode import DECAY_HORIZON
 
     H = int(horizon if horizon is not None else DECAY_HORIZON)
+    w = 0.5 ** np.arange(H)
 
-    out_schema = StructType(
-        [
-            StructField(id_col, events.schema[id_col].dataType),
-            StructField(key, events.schema[key].dataType),
-            StructField("decay_sum", DoubleType()),
-            StructField("decay_cnt", DoubleType()),
-        ]
-    )
-    bs = float(bucket_seconds)
+    def step(st, grp, b):
+        base, cents, cnts = st
+        if b < base:
+            return None
+        cents = np.array(cents, dtype=np.int64)
+        cnts = np.array(cnts, dtype=np.int64)
+        if b > base:
+            shift = min(b - base, H)
+            cents = np.concatenate([np.zeros(shift, dtype=np.int64), cents[: H - shift]])
+            cnts = np.concatenate([np.zeros(shift, dtype=np.int64), cnts[: H - shift]])
+        # dyadic terms -> the sum order cannot change a bit
+        feats = {
+            "decay_sum": float(np.dot(cents.astype(np.float64), w)) / 100.0,
+            "decay_cnt": float(np.dot(cnts.astype(np.float64), w)),
+        }
+        vc, k = _cents_and_count(grp[value])
+        cents[0] += int(vc.sum())
+        cnts[0] += k
+        return feats, (b, cents.tolist(), cnts.tolist())
 
-    def fn(key_, pdf_iter, state):
-        import numpy as np
-        import pandas as pd
-
-        if state.exists:
-            base, cents, cnts = state.get
-            cents = np.asarray(cents, dtype=np.int64)
-            cnts = np.asarray(cnts, dtype=np.int64)
-        else:
-            base = None
-            cents = np.zeros(H, dtype=np.int64)
-            cnts = np.zeros(H, dtype=np.int64)
-        w = 0.5 ** np.arange(H)
-        pdf = pd.concat(list(pdf_iter), ignore_index=True)
-        pdf = pdf.sort_values([ts, id_col], kind="stable").reset_index(drop=True)
-        # NaT -> INT64_MIN under .astype(int64); mask null ts explicitly
-        tnull = pdf[ts].isna().to_numpy()
-        tsec = pdf[ts].astype("datetime64[us]").astype(np.int64) / 1e6
-        bks = np.floor(tsec / bs)
-        frames = []
-
-        def null_frame(grp):
-            # NULL features, no state contribution — shared by the
-            # NULL-ts rule and the late-bucket contract enforcement
-            return pd.DataFrame(
-                {
-                    id_col: grp[id_col].to_numpy(),
-                    key: [key_[0]] * len(grp),
-                    "decay_sum": [None] * len(grp),
-                    "decay_cnt": [None] * len(grp),
-                },
-                dtype="object",
-            )
-        for _, grp in pdf.groupby(ts, sort=True, dropna=False):
-            gi = grp.index
-            if tnull[gi[0]]:
-                # null-ts rows: null features, no history contribution
-                frames.append(null_frame(grp))
-                continue
-            b = int(bks[gi[0]])
-            if base is not None and b < base:
-                # CONTRACT VIOLATION (bucket-ordered arrival): this
-                # bucket already shifted out of the open position in an
-                # earlier micro-batch. Scoring it against the current
-                # ring would read FUTURE buckets, and folding its cents
-                # into cents[0] would book them under the NEWEST bucket
-                # — both permanently diverge from the batch operator.
-                # Late rows get NULL features and contribute nothing
-                # (same enforcement as streaming_target_encode).
-                frames.append(null_frame(grp))
-                continue
-            if base is None:
-                base = b
-            elif b > base:
-                shift = min(b - base, H)
-                cents = np.concatenate(
-                    [np.zeros(shift, dtype=np.int64), cents[: H - shift]]
-                )
-                cnts = np.concatenate(
-                    [np.zeros(shift, dtype=np.int64), cnts[: H - shift]]
-                )
-                base = b
-            # whole same-ts group scores against the pre-group ring;
-            # dyadic terms -> the sum order cannot change a bit
-            s = float(np.dot(cents.astype(np.float64), w)) / 100.0
-            c = float(np.dot(cnts.astype(np.float64), w))
-            k = len(grp)
-            frames.append(
-                pd.DataFrame(
-                    {
-                        id_col: grp[id_col].to_numpy(),
-                        key: [key_[0]] * k,
-                        "decay_sum": [s] * k,
-                        "decay_cnt": [c] * k,
-                    }
-                )
-            )
-            # COUNT(value) counts ±Inf; the cents cast nulls it
-            # (streaming_zscore's rule)
-            vals = grp[value].to_numpy(dtype=np.float64)
-            cents[0] += int(_cents_half_up(vals[np.isfinite(vals)]).sum())
-            cnts[0] += int((~np.isnan(vals)).sum())
-        if base is not None:
-            state.update((base, [int(x) for x in cents], [int(x) for x in cnts]))
-        yield pd.concat(frames, ignore_index=True)
-
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=DECAY_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _peer_scan(
+        events, key, ts, id_col, "decay_sum double, decay_cnt double",
+        DECAY_STATE_SCHEMA, (NO_BUCKET, [0] * H, [0] * H), step,
+        bucket_seconds=float(bucket_seconds),
     )
 
 
@@ -601,69 +565,21 @@ def streaming_frequency_encode(
     out_col: str = "fe_n_prev",
 ) -> DataFrame:
     """Streaming counterpart of ``operators.encode.frequency_encode``:
-    strictly-earlier same-key occurrence count, scored as events arrive —
-    the serving form of the count encoder ("how often has this user done
-    this before"). State is ONE long per key tuple.
+    strictly-earlier same-key occurrence count, the serving form of the
+    count encoder ("how often has this user done this before"). State is
+    ONE long per key tuple; integer arithmetic, exact by construction."""
 
-    Parity contract (integer arithmetic — exact by construction): same
-    arrival shape as streaming_zscore (per-entity time-ordered
-    micro-batches); same-timestamp rows score against the same pre-group
-    state and never each other; NULL-ts rows get NULL and count nothing
-    (the batch operator's rule)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import LongType, StructField, StructType
+    def step(st, grp, _):
+        (n,) = st
+        return {out_col: n}, (n + len(grp),)
 
-    by_l = list(by) if not isinstance(by, str) else [by]
-    out_schema = StructType(
-        [StructField(id_col, events.schema[id_col].dataType)]
-        + [StructField(c, events.schema[c].dataType) for c in by_l]
-        + [StructField(out_col, LongType())]
-    )
-
-    def fn(key_, pdf_iter, state):
-        import pandas as pd
-
-        (n,) = state.get if state.exists else (0,)
-        pdf = pd.concat(list(pdf_iter), ignore_index=True)
-        pdf = pdf.sort_values([ts, id_col], kind="stable").reset_index(drop=True)
-        tnull = pdf[ts].isna().to_numpy()
-        frames = []
-        for _, grp in pdf.groupby(ts, sort=True, dropna=False):
-            k = len(grp)
-            is_null = bool(tnull[grp.index[0]])
-            frames.append(
-                pd.DataFrame(
-                    {
-                        id_col: grp[id_col].to_numpy(),
-                        **{c: [key_[i]] * k for i, c in enumerate(by_l)},
-                        out_col: pd.array(
-                            [None if is_null else n] * k, dtype="Int64"
-                        ),
-                    }
-                )
-            )
-            if not is_null:
-                n += k
-        state.update((n,))
-        yield pd.concat(frames, ignore_index=True)
-
-    return events.groupBy(*by_l).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=FREQ_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _peer_scan(
+        events, by, ts, id_col, f"{out_col} long", FREQ_STATE_SCHEMA, (0,), step
     )
 
 
-# completed-bucket totals + the open bucket's partials
+# completed-bucket totals + the open bucket's id and partials
 TE_STATE_SCHEMA = "n_prev long, cents_prev long, cur_bk long, cur_n long, cur_cents long"
-
-# "no open bucket yet" sentinel for the persisted cur_bk long: buckets are
-# floor(epoch/width) with width >= 1 s, so |bucket| < 2^40 for any
-# representable timestamp — -2^62 is unreachable by real data (a plain -1
-# would collide with pre-1970 epochs, which the fuzz suite exercises).
-TE_NO_BUCKET = -(1 << 62)
 
 
 def streaming_target_encode(
@@ -678,146 +594,45 @@ def streaming_target_encode(
 ) -> DataFrame:
     """Streaming counterpart of ``operators.encode.target_encode``:
     per-category Bayesian-smoothed label mean over strictly-previous
-    COMPLETED time buckets, scored as events arrive — the online form of
-    the target encoder, frozen at bucket granularity exactly like the
-    batch operator (rows never see their own bucket).
+    COMPLETED time buckets, the online form of the target encoder, frozen
+    at bucket granularity exactly like the batch operator (rows never see
+    their own bucket).
 
-    State per category is five longs: completed-bucket count + label
-    cents, plus the OPEN bucket's id and partials; when an event opens a
-    later bucket the open partials fold into the totals. BIT-EXACT parity
-    with the batch operator for labels of <= 2 decimals (the
-    ``encode.cents_sql`` contract): label sums are integer cents rounded
-    HALF_UP like the batch DECIMAL(18,2) cast (``_cents_half_up`` — so
-    even half-cent ties like 0.125 match), cents/100.0 and CAST(DECIMAL
-    AS DOUBLE) are both correctly rounded to the same double, and the
-    float post-processing replays the batch expression tree op for op.
-    Arrival contract: per-category bucket-ordered micro-batches (the
-    daily-increment shape) — ENFORCED: an event whose bucket precedes
-    the open bucket (late data across micro-batches) gets NULL features
-    with its te_bucket kept (observable downstream) and contributes
-    nothing to state, instead of silently corrupting it. NULL-ts rows
-    get NULL features and count nothing; NULL labels count nothing
-    (COUNT(label) semantics).
+    State per category is five longs: completed-bucket count and label
+    cents, plus the open bucket's id and partials; a row opening a later
+    bucket folds the open partials into the totals. Label sums are integer
+    cents rounded HALF_UP like the batch DECIMAL(18,2) cast (so half-cent
+    ties like 0.125 match), cents/100.0 and CAST(DECIMAL AS DOUBLE) are
+    the same correctly rounded double, and the float post-processing
+    replays the batch expression tree op for op. Late rows keep their
+    ``te_bucket``, so contract violations are observable downstream.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
     from ..operators.encode import TE_PRIOR, TE_SMOOTHING_M
 
     m = float(TE_SMOOTHING_M if m is None else m)
     prior = float(TE_PRIOR if prior is None else prior)
     mp = m * prior
-    bs = float(time_bucket)
 
-    out_schema = StructType(
-        [
-            StructField(id_col, events.schema[id_col].dataType),
-            StructField(by, events.schema[by].dataType),
-            StructField("te_bucket", LongType()),
-            StructField("te_n_prev", LongType()),
-            StructField("te_mean_prev", DoubleType()),
-            StructField("te_enc", DoubleType()),
-        ]
-    )
-
-    def fn(key_, pdf_iter, state):
-        import numpy as np
-        import pandas as pd
-
-        if state.exists:
-            n_prev, cents_prev, cur_bk, cur_n, cur_cents = state.get
-            if cur_bk == TE_NO_BUCKET:
-                cur_bk = None
-        else:
-            n_prev, cents_prev, cur_bk, cur_n, cur_cents = 0, 0, None, 0, 0
-        pdf = pd.concat(list(pdf_iter), ignore_index=True)
-        pdf = pdf.sort_values([ts, id_col], kind="stable").reset_index(drop=True)
-        tnull = pdf[ts].isna().to_numpy()
-        # same epoch arithmetic as the batch operator: micros/1e6 then
-        # floor(e / bucket) — identical IEEE ops, identical buckets
-        tsec = pdf[ts].astype("datetime64[us]").astype(np.int64) / 1e6
-        bks = np.floor(tsec / bs)
-        frames = []
-
-        def null_frame(grp, bucket=None):
-            # NULL features, no state contribution — shared by the
-            # NULL-ts rule (bucket unknown -> NULL) and the late-bucket
-            # enforcement (bucket kept, so violations are observable)
-            k = len(grp)
-            return pd.DataFrame(
-                {
-                    id_col: grp[id_col].to_numpy(),
-                    by: [key_[0]] * k,
-                    "te_bucket": (
-                        pd.array([None] * k, dtype="Int64")
-                        if bucket is None
-                        else np.full(k, bucket, dtype=np.int64)
-                    ),
-                    "te_n_prev": pd.array([None] * k, dtype="Int64"),
-                    "te_mean_prev": [None] * k,
-                    "te_enc": [None] * k,
-                }
+    def step(st, grp, b):
+        n_prev, cents_prev, cur_bk, cur_n, cur_cents = st
+        if b < cur_bk:
+            return None
+        if b > cur_bk:
+            n_prev, cents_prev, cur_bk, cur_n, cur_cents = (
+                n_prev + cur_n, cents_prev + cur_cents, b, 0, 0
             )
+        sumd = float(cents_prev) / 100.0  # == CAST(DECIMAL(38,2) AS DOUBLE)
+        feats = {
+            "te_n_prev": n_prev,
+            "te_mean_prev": sumd / float(n_prev) if n_prev >= 1 else None,
+            "te_enc": (sumd + mp) / (float(n_prev) + m),
+        }
+        vc, k = _cents_and_count(grp[label])
+        return feats, (n_prev, cents_prev, cur_bk, cur_n + k, cur_cents + int(vc.sum()))
 
-        for _, grp in pdf.groupby(pd.Series(bks).where(~tnull), sort=True, dropna=False):
-            k = len(grp)
-            if tnull[grp.index[0]]:
-                frames.append(null_frame(grp))
-                continue
-            b = int(bks[grp.index[0]])
-            if cur_bk is not None and b < cur_bk:
-                # CONTRACT VIOLATION (per-category bucket-ordered
-                # arrival): this bucket already completed in an earlier
-                # micro-batch. Silently scoring it against history that
-                # includes LATER buckets — and folding its labels into
-                # the currently-open bucket — would permanently diverge
-                # from the batch operator. Late rows get NULL features
-                # (te_bucket kept) and contribute NOTHING to state; late
-                # data beyond the contract is a reprocess, not a state
-                # patch (streaming_zscore's rule).
-                frames.append(null_frame(grp, bucket=b))
-                continue
-            if cur_bk is not None and b > cur_bk:
-                n_prev += cur_n
-                cents_prev += cur_cents
-                cur_n = cur_cents = 0
-            if cur_bk is None or b > cur_bk:
-                cur_bk = b
-            sumd = float(cents_prev) / 100.0  # == CAST(DECIMAL(38,2) AS DOUBLE)
-            mean = sumd / float(n_prev) if n_prev >= 1 else None
-            enc = (sumd + mp) / (float(n_prev) + m)
-            frames.append(
-                pd.DataFrame(
-                    {
-                        id_col: grp[id_col].to_numpy(),
-                        by: [key_[0]] * k,
-                        "te_bucket": np.full(k, b, dtype=np.int64),
-                        "te_n_prev": np.full(k, n_prev, dtype=np.int64),
-                        "te_mean_prev": [mean] * k,
-                        "te_enc": [enc] * k,
-                    }
-                )
-            )
-            # COUNT(label) counts ±Inf; the DECIMAL cast nulls it
-            # (streaming_zscore's rule)
-            vals = grp[label].to_numpy(dtype=np.float64)
-            cur_cents += int(_cents_half_up(vals[np.isfinite(vals)]).sum())
-            cur_n += int((~np.isnan(vals)).sum())
-        state.update(
-            (
-                n_prev,
-                cents_prev,
-                TE_NO_BUCKET if cur_bk is None else cur_bk,
-                cur_n,
-                cur_cents,
-            )
-        )
-        yield pd.concat(frames, ignore_index=True)
-
-    return events.groupBy(by).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=TE_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _peer_scan(
+        events, by, ts, id_col,
+        "te_n_prev long, te_mean_prev double, te_enc double",
+        TE_STATE_SCHEMA, (0, 0, NO_BUCKET, 0, 0), step,
+        bucket_seconds=float(time_bucket), bucket_col="te_bucket",
     )

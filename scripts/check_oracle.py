@@ -106,6 +106,37 @@ def compare(name: str, spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> str:
     return "OK (exact)"
 
 
+# verdict prefixes that fail the sweep; "OK (allclose; ...)" passes but is
+# reported, so exact-hash risks stay visible
+FAILING = ("ROWCOUNT", "SCHEMA", "VALUE", "WIRE", "DTYPE", "SPARK", "DUCKDB", "EMPTY")
+
+
+def open_duckdb(sf_dir: str):
+    """DuckDB connection with one view per parquet table under sf_dir."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(p):
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def check(spark, con, sf_dir: str, name: str, fn, oracle: str | None) -> str:
+    """Verdict for one registered query: its Spark result against its
+    oracle SQL in DuckDB, or a row count when it has no oracle."""
+    try:
+        sdf = fn(spark, sf_dir).toPandas()
+    except Exception as e:
+        return f"SPARK ERROR: {type(e).__name__}: {e}"
+    if oracle is None:
+        return f"rows-only: {len(sdf)} rows" if len(sdf) else "EMPTY: rows-only, 0 rows"
+    try:
+        ddf = con.sql(oracle).df()
+    except Exception as e:
+        return f"DUCKDB ERROR: {type(e).__name__}: {e}"
+    return f"{compare(name, sdf, ddf)}  ({len(sdf)} rows)"
+
+
 def main():
     only = set(sys.argv[1:])
     sf_dir = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
@@ -114,11 +145,7 @@ def main():
     from image_feature_extraction_spark.session import get_spark
 
     spark = get_spark(app_name="check-oracle")
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = open_duckdb(sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -131,27 +158,9 @@ def main():
         if only and name not in only:
             continue
         t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir).toPandas()
-        except Exception as e:
-            print(f"{name:28s} SPARK ERROR: {type(e).__name__}: {e}")
-            failures += 1
-            continue
-        if name not in oracles:
-            print(f"{name:28s} rows-only: {len(sdf)} rows  ({time.time()-t0:.1f}s)")
-            if len(sdf) == 0:
-                failures += 1
-            continue
-        try:
-            ddf = con.sql(oracles[name]).df()
-        except Exception as e:
-            print(f"{name:28s} DUCKDB ERROR: {type(e).__name__}: {e}")
-            failures += 1
-            continue
-        verdict = compare(name, sdf, ddf)
-        print(f"{name:28s} {verdict}  ({len(sdf)} rows, {time.time()-t0:.1f}s)")
-        if verdict.startswith(("ROWCOUNT", "SCHEMA", "VALUE", "WIRE", "DTYPE")):
-            failures += 1
+        verdict = check(spark, con, sf_dir, name, fn, oracles.get(name))
+        print(f"{name:28s} {verdict}  {time.time()-t0:.1f}s")
+        failures += verdict.startswith(FAILING)
     spark.stop()
     print(f"\n{'PASS' if failures == 0 else 'FAIL'} ({failures} failures)")
     sys.exit(1 if failures else 0)

@@ -351,33 +351,6 @@ def test_mode_label_options(spark):
     assert plain.loc["g5", "mode_label"] == "error"
 
 
-def test_xxhash64_fast_path_structure(spark, docs):
-    """hash_fn="xxhash64": same shape/determinism as the md5 parity path;
-    exact duplicates still collide to identical signatures/fingerprints."""
-    sig_a = D.minhash_signatures(docs, num_hashes=4, hash_fn="xxhash64").toPandas()
-    sig_b = D.minhash_signatures(docs, num_hashes=4, hash_fn="xxhash64").toPandas()
-    pd.testing.assert_frame_equal(
-        sig_a.sort_values("doc_id").reset_index(drop=True),
-        sig_b.sort_values("doc_id").reset_index(drop=True),
-    )
-    md5 = D.minhash_signatures(docs, num_hashes=4).toPandas()
-    assert set(sig_a["doc_id"]) == set(md5["doc_id"])
-    assert (sig_a[[f"h{j}" for j in range(4)]] >= 0).all().all()
-    fp = T.fingerprint(docs, hash_fn="xxhash64").toPandas().set_index("doc_id")
-    fp_md5 = T.fingerprint(docs).toPandas().set_index("doc_id")
-    assert (fp["n_shingles"] == fp_md5["n_shingles"]).all()
-    # dup docs (same text) collide on both paths
-    sig_m = sig_a.set_index("doc_id")
-    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
-    by_text = {}
-    for d, t in texts.items():
-        by_text.setdefault(t, []).append(d)
-    for t, ids in by_text.items():
-        if len(ids) > 1 and all(i in sig_m.index for i in ids):
-            rows = sig_m.loc[ids]
-            assert (rows.nunique() == 1).all()
-
-
 def test_exact_dedup_survivors(spark, docs):
     out = D.exact_dedup(docs).toPandas()
     pdf = docs.toPandas()

@@ -743,19 +743,15 @@ def test_streaming_twins_null_ts_parity(spark, tmp_path):
     assert pd.isna(got.loc[4, "te_enc"])
 
 
-@pytest.mark.parametrize("seed", [13, 4242])
-def test_streaming_twins_fuzz_vs_batch(spark, tmp_path, seed):
-    """Randomized ordered-arrival fuzz: all four encoder twins == their
-    batch operators on a random event table with NULL ts/values, ±Inf
-    values, duplicate timestamps, and multiple entities, split into 3
-    time-ordered micro-batches (NULL-ts rows salted into every slice)."""
+def _fuzz_events(spark, seed):
+    """Random event table for the twin fuzz, with NULL ts/values, ±Inf
+    values, duplicate timestamps and several entities, plus 3 contiguous
+    time-slice predicates (NULL-ts rows spread by event_id mod 3, so
+    every slice holds some)."""
     import datetime as dt
-    import time as _time
 
     import numpy as np
     import pandas as pd
-
-    from image_feature_extraction_spark.operators import encode as EN
 
     rng = np.random.default_rng(seed)
     n = 400
@@ -784,87 +780,134 @@ def test_streaming_twins_fuzz_vs_batch(spark, tmp_path, seed):
         "event_id", "user_id", "event_type",
         "cast(ts as timestamp_ntz) ts", "value",
     )
-    # 3 contiguous time slices; NULL-ts rows spread by event_id mod 3 so
-    # every micro-batch contains some
+    # slice bounds are absolute epochs (computed tz-naively: T0.timestamp()
+    # would depend on the host timezone)
     e = F.col("ts").cast("timestamp").cast("double")
-    b1, b2 = 10 * 86400, 20 * 86400
+    base_ep = (pd.Timestamp("2024-01-01") - pd.Timestamp("1970-01-01")).total_seconds()
+    b1, b2 = 10 * 86400 + base_ep, 20 * 86400 + base_ep
     slices = [
         (e <= b1) | (e.isNull() & (F.col("event_id") % 3 == 0)),
         ((e > b1) & (e <= b2)) | (e.isNull() & (F.col("event_id") % 3 == 1)),
         (e > b2) | (e.isNull() & (F.col("event_id") % 3 == 2)),
     ]
-    d = str(tmp_path / f"fuzz{seed}")
+    return df, slices
+
+
+def _write_slices(df, slices, d):
+    import time as _time
+
     for cond in slices:
         df.where(cond).coalesce(1).write.mode("append").parquet(d)
-        _time.sleep(1.1)
-    schema = df.schema
+        _time.sleep(1.1)  # distinct mtimes -> deterministic file order
+
+
+def _twin_cases():
+    """(name, streaming twin, batch operator, compared columns) for the
+    four encoder twins, on the _fuzz_events schema."""
+    from image_feature_extraction_spark.operators import encode as EN
+
+    return [
+        (
+            "zs",
+            lambda s: ST.streaming_zscore(s),
+            lambda b: EN.expanding_zscore(b, by="user_id", ts="ts", value="value"),
+            ["event_id", "user_id", "z_n_prev", "z_mean_prev", "z_var_prev",
+             "z_score"],
+        ),
+        (
+            "fe",
+            lambda s: ST.streaming_frequency_encode(s, by=("user_id", "event_type")),
+            lambda b: EN.frequency_encode(b, by=["user_id", "event_type"], ts="ts"),
+            ["event_id", "user_id", "event_type", "fe_n_prev"],
+        ),
+        (
+            "te",
+            lambda s: ST.streaming_target_encode(
+                s, by="event_type", ts="ts", label="value", time_bucket=21600.0
+            ),
+            lambda b: EN.target_encode(
+                b.select("event_id", "event_type", "ts", "value"),
+                by="event_type", ts="ts", label="value", time_bucket=21600.0,
+            ),
+            ["event_id", "event_type", "te_bucket", "te_n_prev", "te_mean_prev",
+             "te_enc"],
+        ),
+        (
+            "dc",
+            lambda s: ST.streaming_decayed(s, key="user_id", bucket_seconds=21600.0),
+            lambda b: EN.decayed_features(
+                b.select("event_id", "user_id", "ts", "value"),
+                by="user_id", ts="ts", value="value", bucket_seconds=21600.0,
+            ),
+            ["event_id", "user_id", "decay_sum", "decay_cnt"],
+        ),
+    ]
+
+
+def _by_event(pdf):
+    return pdf.sort_values("event_id").reset_index(drop=True)
+
+
+@pytest.mark.parametrize("seed", [13, 4242])
+def test_streaming_twins_fuzz_vs_batch(spark, tmp_path, seed):
+    """Randomized ordered-arrival fuzz: all four encoder twins == their
+    batch operators on _fuzz_events, split into 3 time-ordered
+    micro-batches."""
+    import pandas as pd
+
+    df, slices = _fuzz_events(spark, seed)
+    d = str(tmp_path / f"fuzz{seed}")
+    _write_slices(df, slices, d)
     batch = spark.read.parquet(d)
+    # every micro-batch carries timestamped rows, so state crosses batches
+    per_slice = [df.where(c & F.col("ts").isNotNull()).count() for c in slices]
+    assert min(per_slice) > 0, per_slice
 
-    def drain(stream_df, name):
-        ST.run_to_memory(stream_df, name, "update")
-        return (
-            spark.table(name).toPandas().sort_values("event_id")
-            .reset_index(drop=True)
+    for name, twin, batch_op, cols in _twin_cases():
+        sdf = ST.stream_events(spark, d, df.schema, max_files_per_trigger=1)
+        ST.run_to_memory(twin(sdf), f"fz_{name}{seed}", "update")
+        got = _by_event(spark.table(f"fz_{name}{seed}").toPandas())
+        want = _by_event(batch_op(batch).select(*cols).toPandas())
+        pd.testing.assert_frame_equal(got, want, check_dtype=False)  # exact
+
+
+def test_streaming_twins_restart_from_checkpoint(spark, tmp_path):
+    """Restart parity: each encoder twin drains slices 1-2 with a
+    checkpointLocation and stops; slice 3 then arrives and the query
+    restarts from the same checkpoint. The union of both runs' output
+    must equal the batch operator over all three slices exactly."""
+    import pandas as pd
+
+    df, slices = _fuzz_events(spark, 13)
+    d = str(tmp_path / "restart_src")
+    cases = _twin_cases()
+
+    def run(twin, name):
+        # the memory sink cannot recover from a checkpoint; a parquet
+        # foreachBatch sink can
+        out = str(tmp_path / "out" / name)
+        sdf = ST.stream_events(spark, d, df.schema, max_files_per_trigger=1)
+        q = (
+            twin(sdf).writeStream
+            .foreachBatch(lambda bdf, _: bdf.write.mode("append").parquet(out))
+            .outputMode("update")
+            .option("checkpointLocation", str(tmp_path / "ckpt" / name))
+            .trigger(availableNow=True)
+            .start()
         )
+        q.awaitTermination()
+        return spark.read.parquet(out).toPandas()
 
-    def batch_pdf(bdf, cols):
-        return (
-            bdf.select(*cols).toPandas().sort_values("event_id")
-            .reset_index(drop=True)
-        )
-
-    sdf = ST.stream_events(spark, d, schema, max_files_per_trigger=1)
-    got = drain(ST.streaming_zscore(sdf), f"fz_zs{seed}")
-    want = batch_pdf(
-        EN.expanding_zscore(batch, by="user_id", ts="ts", value="value"),
-        ["event_id", "user_id", "z_n_prev", "z_mean_prev", "z_var_prev",
-         "z_score"],
-    )
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
-
-    sdf = ST.stream_events(spark, d, schema, max_files_per_trigger=1)
-    got = drain(
-        ST.streaming_frequency_encode(sdf, by=("user_id", "event_type")),
-        f"fz_fe{seed}",
-    )
-    want = batch_pdf(
-        EN.frequency_encode(batch, by=["user_id", "event_type"], ts="ts"),
-        ["event_id", "user_id", "event_type", "fe_n_prev"],
-    )
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
-
-    sdf = ST.stream_events(spark, d, schema, max_files_per_trigger=1)
-    got = drain(
-        ST.streaming_target_encode(
-            sdf, by="event_type", ts="ts", label="value", time_bucket=21600.0
-        ),
-        f"fz_te{seed}",
-    )
-    want = batch_pdf(
-        EN.target_encode(
-            batch.select("event_id", "event_type", "ts", "value"),
-            by="event_type", ts="ts", label="value", time_bucket=21600.0,
-        ),
-        ["event_id", "event_type", "te_bucket", "te_n_prev", "te_mean_prev",
-         "te_enc"],
-    )
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
-
-    sdf = ST.stream_events(spark, d, schema, max_files_per_trigger=1)
-    got = drain(
-        ST.streaming_decayed(
-            sdf, key="user_id", bucket_seconds=21600.0
-        ),
-        f"fz_dc{seed}",
-    )
-    want = batch_pdf(
-        EN.decayed_features(
-            batch.select("event_id", "user_id", "ts", "value"),
-            by="user_id", ts="ts", value="value", bucket_seconds=21600.0,
-        ),
-        ["event_id", "user_id", "decay_sum", "decay_cnt"],
-    )
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)  # exact
+    _write_slices(df, slices[:2], d)
+    first = {name: len(run(twin, name)) for name, twin, _, _ in cases}
+    _write_slices(df, slices[2:], d)
+    batch = spark.read.parquet(d)
+    n = batch.count()
+    for name, twin, batch_op, cols in cases:
+        got = _by_event(run(twin, name)[cols])
+        assert 0 < first[name] < n == len(got), (name, first[name], len(got))
+        want = _by_event(batch_op(batch).select(*cols).toPandas())
+        pd.testing.assert_frame_equal(got, want, check_dtype=False)  # exact
 
 
 def test_streaming_target_encode_late_bucket_observable(spark, tmp_path):
